@@ -30,8 +30,9 @@ from pyspark.sql import DataFrame, SparkSession
 from dbt_fal_spark.materialize import (
     apply_dtype_casts,
     incremental_merge,
-    replace_relation_atomic,
+    live_version_dir,
     snapshot_scd2,
+    vacuum_table,
     write_table,
 )
 from dbt_fal_spark.plans.executor import parallel_executor
@@ -43,6 +44,7 @@ from dbt_fal_spark.environments import load_environments
 from dbt_fal_spark.project.loader import load_profile, load_project
 from dbt_fal_spark.project.manifest import DbtModel, DbtTest
 from dbt_fal_spark.session import get_spark
+from dbt_fal_spark.sources.readers import read_source
 
 # `--debug` CLI flag opens this logger up (reference: args.py:205-276);
 # default WARNING keeps programmatic use silent
@@ -250,83 +252,41 @@ class FalSpark:
         """Re-register persisted tables after a process restart.
 
         Spark's default in-memory catalog forgets table registrations when
-        the session ends, but the data stays under spark-warehouse/<schema>.db/.
+        the session ends, but the data stays in the database's directory.
         The reference relies on the warehouse being durable between CLI
         invocations (`fal run` reads the previous `dbt run`'s tables —
-        reference: fal_runner.py:34-76); mirror that by attaching any
-        model directory present on disk as an external parquet table.
+        reference: fal_runner.py:34-76); mirror that by attaching each
+        model's live data directory found on disk
+        (``materialize.live_version_dir``) as an external parquet table.
         View/ephemeral models are re-created lazily on first reference
         (see ``_identifier``) — dbt semantics, where a view is just stored
         SQL."""
-        if self._warehouse_dir is not None:
-            wh_path = self._warehouse_dir
-        else:
-            wh = self.spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-            wh_path = Path(wh.removeprefix("file:"))
-        db_dir = wh_path / f"{self.schema}.db"
         for model in self.manifest.models.values():
             if model.materialization in ("view", "ephemeral"):
                 continue
             identifier = f"{self.schema}.{model.target_name}"
             if self.spark.catalog.tableExists(identifier):
                 continue
-            # the atomic swap leaves copy-on-write version dirs
-            # (<name>__v<uuid8>, see materialize.replace_relation_atomic).
-            # The live one is read from the sidecar pointer file each
-            # successful flip writes; absent a pointer (pre-pointer
-            # tables), fall back to newest-mtime-with-data — which can
-            # misidentify a version that committed its parquet but
-            # crashed before SET LOCATION, the gap the pointer closes.
-            # Dirs holding only _SUCCESS markers or _temporary staging
-            # files (interrupted writes) have no committed data and are
-            # skipped; committed parquet never lives under a '_'/'.'
-            # prefixed path (hive partition dirs are 'col=value').
-            def _has_committed_parquet(root):
-                return any(
-                    not any(
-                        part.startswith(("_", "."))
-                        for part in f.relative_to(root).parts
-                    )
-                    for f in root.rglob("*.parquet")
-                )
-
-            import re as _re
-
-            from .materialize import _VERSION_RE, _read_live_pointer
-
-            candidates = [db_dir / model.target_name] + [
-                p
-                for p in db_dir.glob(f"{model.target_name}__v*")
-                if p.is_dir()
-                and _re.fullmatch(_re.escape(model.target_name) + _VERSION_RE[:-1], p.name)
-            ]
-            live = [
-                c for c in candidates if c.is_dir() and _has_committed_parquet(c)
-            ]
-            ptr = _read_live_pointer(str(db_dir / model.target_name))
-            loc = None
-            if ptr is not None:
-                p = Path(ptr)
-                if p.is_dir() and _has_committed_parquet(p):
-                    loc = p
-            if loc is None and live:
-                loc = max(live, key=lambda p: p.stat().st_mtime)
+            loc = live_version_dir(self.spark, identifier)
             if loc is not None:
                 self.spark.sql(
-                    f"CREATE TABLE {identifier} USING parquet LOCATION '{loc.resolve()}'"
+                    f"CREATE TABLE {identifier} USING parquet LOCATION '{loc}'"
                 )
 
     # ------------------------------------------------------------------
     # relation resolution
     # ------------------------------------------------------------------
 
+    def _model(self, name: str) -> DbtModel | None:
+        try:
+            return self.manifest.model_by_name(name)
+        except KeyError:
+            return None
+
     def _identifier(self, model_name: str) -> str:
         if model_name in self._view_models:
             return f"{self.schema}__{model_name}"
-        try:
-            model = self.manifest.model_by_name(model_name)
-        except KeyError:
-            model = None
+        model = self._model(model_name)
         if model is not None and model.materialization in ("view", "ephemeral"):
             # a view is stored SQL — re-derive it on first reference in
             # this process (dbt semantics; upstream views chain lazily
@@ -470,25 +430,12 @@ class FalSpark:
             return view
         if src.path:
             path = self._resolve_path_or_url(str(src.path))
-            reader = self.spark.read
             if src.format == "csv":
-                df = reader.csv(path, header=True, inferSchema=True)
+                df = self.spark.read.csv(path, header=True, inferSchema=True)
             else:
-                nanos_cols = (src.meta or {}).get("nanos_cols", [])
-                if nanos_cols:
-                    # parquet TIMESTAMP(NANOS): read as int64, truncate to µs
-                    self.spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-                df = reader.format(src.format).load(path)
-                from pyspark.sql import functions as F
-
-                for c in nanos_cols:
-                    if dict(df.dtypes).get(c) == "bigint":
-                        df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
-                # naive parquet timestamps → TIMESTAMP, mirroring
-                # sources/readers.py (arbitrary driver sessions infer NTZ)
-                for c, dtype in df.dtypes:
-                    if dtype.startswith("timestamp_ntz"):
-                        df = df.withColumn(c, F.col(c).cast("timestamp"))
+                df = read_source(
+                    self.spark, path, src.format, (src.meta or {}).get("nanos_cols", ())
+                )
             df.createOrReplaceTempView(view)
             return view
         return table_name  # pre-registered table/view
@@ -553,38 +500,24 @@ class FalSpark:
         """Eager write (reference: project.py:803-853; default overwrite).
         Writes carry the target model's DECLARED layout (partition_by /
         bucket_by / sort_by) — a script overwrite must not flatten a
-        bucketed/partitioned table — and appends are column-name-aligned
-        before the positional insertInto (a reordered-column df
-        previously appended values into the wrong columns). ``df`` may
-        be a pandas DataFrame (the reference's currency) — converted at
-        this boundary."""
+        bucketed/partitioned table. Any other mode appends through the
+        incremental ``append`` strategy, which creates an absent table
+        and aligns columns by name before the positional insertInto (a
+        reordered-column df must not land values in the wrong columns).
+        ``df`` may be a pandas DataFrame (the reference's currency) —
+        converted at this boundary."""
         name = target_2 or target_1
         df = apply_dtype_casts(self._to_spark(df), dtype)
-        model = next(
-            (m for m in self.manifest.models.values() if m.name == name), None
-        )
+        model = self._model(name)
         # dbt alias: write to the PHYSICAL relation (run.feature 'model aliases')
         identifier = f"{self.schema}.{model.target_name if model is not None else name}"
-        layout = {
-            "partition_by": getattr(model, "partition_by", None),
-            "bucket_by": getattr(model, "bucket_by", None),
-            "sort_by": getattr(model, "sort_by", None),
-        }
+        layout = model.layout if model is not None else {}
         if mode == "overwrite":
-            if self.spark.catalog.tableExists(identifier):
-                replace_relation_atomic(self.spark, df, identifier, **layout)
-            else:
-                write_table(df, identifier, mode="overwrite", **layout)
+            write_table(df, identifier, **layout)
         else:
-            if self.spark.catalog.tableExists(identifier):
-                cols = self.spark.table(identifier).columns  # insertInto is positional
-                df.select(*cols).write.mode("append").format("parquet").insertInto(identifier)
-            else:
-                write_table(df, identifier, mode="overwrite", **layout)
-        try:
-            self.manifest.model_by_name(name).status = "success"
-        except KeyError:
-            pass
+            incremental_merge(self.spark, df, identifier, None, strategy="append", **layout)
+        if model is not None:
+            model.status = "success"
 
     def write_to_source(
         self,
@@ -814,7 +747,7 @@ class FalSpark:
         (reference: teleport read, teleport.py:43-56). Accepts the same
         local-path / object-store URL forms as ``teleport_export``."""
         df = self.spark.read.parquet(self._resolve_path_or_url(url))
-        write_table(df, f"{self.schema}.{name}", mode="overwrite")
+        write_table(df, f"{self.schema}.{name}")
 
     def _load_state(self) -> dict[str, str]:
         """Prior name→checksum snapshot for ``state:new/modified`` selectors
@@ -1053,14 +986,13 @@ class FalSpark:
                 if t.store_failures:
                     # dbt convention: failing rows land in the audit
                     # schema <schema>_dbt_test__audit.<test_name>,
-                    # overwritten per run. Write FIRST and count the
+                    # replaced per run. Write FIRST and count the
                     # written table: counting fail_df separately would
                     # run the whole pipeline twice, and under limit() the
-                    # two jobs could even select different rows (r12
-                    # review finding).
+                    # two jobs could even select different rows.
                     audit = f"{self.schema}_dbt_test__audit"
                     self.spark.sql(f"CREATE DATABASE IF NOT EXISTS `{audit}`")
-                    write_table(fail_df, f"{audit}.{t.name}", mode="overwrite")
+                    write_table(fail_df, f"{audit}.{t.name}")
                     violations = self.spark.table(f"{audit}.{t.name}").count()
                 else:
                     violations = fail_df.count()
@@ -1245,34 +1177,28 @@ class FalSpark:
         old files, same guarantee as any model rebuild. Returns the
         partition count written.
 
-        Concurrent REBUILDS are handled optimistically (r14): the live
+        Concurrent REBUILDS are handled optimistically: the live
         location is captured before the read, and the swap commits only
         if it is unchanged — otherwise ConcurrentRebuildError aborts the
         compaction (the rebuild's fresh data wins; re-run compact). The
         check-then-flip is atomic under the per-table commit lock shared
         with every rebuild's swap."""
-        from .materialize import table_swap_token
+        from .materialize import layout_cols, replace_relation_atomic, table_swap_token
 
         self._require_table_model(model_name, "compact")
         identifier = self._identifier(model_name)
         expected = table_swap_token(self.spark, identifier)
         df = self.spark.table(identifier)
-        model = next(
-            (m for m in self.manifest.models.values() if m.name == model_name), None
-        )
         # every declared layout must survive compaction — a rewrite that
         # flattened a bucketed/partitioned/clustered table would heal the
         # small files while silently voiding the zero-shuffle-join /
         # partition-pruning / data-skipping contract the config declared
-        sort_by = getattr(model, "sort_by", None)
-        bucket_by = getattr(model, "bucket_by", None)
-        partition_by = getattr(model, "partition_by", None)
+        model = self._model(model_name)
+        sort_by, bucket_by, partition_by = model.sort_by, model.bucket_by, model.partition_by
         if bucket_by:
             # shuffle into exactly n_buckets tasks on the bucket cols so
             # the rewrite emits one file per bucket (the minimal healed
             # layout) instead of files × tasks
-            from .materialize import layout_cols
-
             cols = layout_cols(bucket_by["cols"])
             n = int(bucket_by.get("n", 32))
             out = df.repartition(n, *cols)
@@ -1283,8 +1209,6 @@ class FalSpark:
             )
             return n
         if sort_by:
-            from .materialize import layout_cols
-
             cols = layout_cols(sort_by)
             n = target_partitions or self.spark.sparkContext.defaultParallelism
             out = df.repartitionByRange(n, *cols).sortWithinPartitions(*cols)
@@ -1297,10 +1221,7 @@ class FalSpark:
         if partition_by:
             # co-locate each hive partition's rows so the rewrite emits
             # few files per partition directory, not files × tasks
-            from .materialize import layout_cols
-
-            pcols = layout_cols(partition_by)
-            out = df.repartition(n, *pcols)
+            out = df.repartition(n, *layout_cols(partition_by))
             replace_relation_atomic(
                 self.spark, out, identifier, partition_by=partition_by,
                 expected_token=expected,
@@ -1312,9 +1233,9 @@ class FalSpark:
         # for an arbitrary post-transform plan. The JVM-side RDD probe
         # returns the same number as df.rdd.getNumPartitions() without
         # constructing the Python-conversion RDD (the bulk of that
-        # probe's ~100 ms driver cost, r16 measurement); either way this
-        # runs once per compact() call, directly before a full table
-        # rewrite that dwarfs it.
+        # probe's ~100 ms driver cost); either way this runs once per
+        # compact() call, directly before a full table rewrite that
+        # dwarfs it.
         try:
             cur = df._jdf.queryExecution().toRdd().getNumPartitions()
         except Exception:  # foreign session without the internal API
@@ -1326,65 +1247,12 @@ class FalSpark:
 
     def vacuum(self, model_name: str) -> int:
         """Delete a model's non-live copy-on-write version directories
-        (the atomic swap keeps ONE previous version as a grace window
-        for in-flight readers — see materialize.replace_relation_atomic;
-        Delta's VACUUM analogue). Call when no readers are active, e.g.
-        between pipeline runs; readers with long scans are additionally
-        protected by ``spark.falspark.vacuum.retainSeconds`` (version
-        dirs modified within the window survive, Delta's retention
-        check). A CONCURRENT rebuild is guarded two ways: version dirs
-        newer than the last committed flip (the live pointer file's
-        mtime) are skipped, so a half-written swap target is never
-        deleted mid-flip; and because a flip can commit BETWEEN our
-        catalog read and the pointer-mtime read (making the new live
-        dir look both non-live and old), the pointer's CONTENT and the
-        catalog location are re-read AFTER capturing the mtime and
-        unioned into the keep set — the post-flip live dir can never
-        be deleted. Returns the number of dirs removed."""
-        import os
-        import re as _re
-        import time as _time
-
-        from .materialize import (
-            RETAIN_CONF,
-            _VERSION_RE,
-            _live_pointer_path,
-            _read_live_pointer,
-            _table_location,
-            _vacuum_versions,
-        )
-
+        (``materialize.vacuum_table``). Call when no readers are active,
+        e.g. between pipeline runs; readers with long scans are
+        additionally protected by ``spark.falspark.vacuum.retainSeconds``.
+        Returns the number of dirs removed."""
         self._require_table_model(model_name, "vacuum")
-        identifier = self._identifier(model_name)
-        live = _table_location(self.spark, identifier)
-        if live is None:
-            return 0
-        base = _re.sub(_VERSION_RE, "", live.rstrip("/"))
-        try:
-            ref_mtime = os.path.getmtime(_live_pointer_path(base))
-        except OSError:  # pre-pointer table: fall back to the live dir
-            ref_mtime = os.path.getmtime(live) if os.path.isdir(live) else None
-        retain = float(self.spark.conf.get(RETAIN_CONF, "0") or "0")
-        if retain > 0 and ref_mtime is not None:
-            ref_mtime = min(ref_mtime, _time.time() - retain)
-        # TOCTOU guard: a flip committing between the _table_location
-        # read above and the getmtime above leaves the NEW live dir
-        # outside keep with an mtime older than the fresh pointer. Re-
-        # read both sources now — after ref_mtime is pinned — so that
-        # dir is protected whichever side of our reads the flip landed.
-        keep = {live}
-        ptr = _read_live_pointer(base)
-        if ptr:
-            keep.add(ptr)
-        relive = _table_location(self.spark, identifier)
-        if relive:
-            keep.add(relive)
-        # a version dir an in-process writer is still producing is never
-        # deleted: writers register their dirs (r14), and since r15 the
-        # registry is re-checked per directory immediately before each
-        # rmtree inside _vacuum_versions (ADVICE r14 — a snapshot taken
-        # here could miss a writer that registers after this line)
-        return _vacuum_versions(base, keep=keep, keep_newer_than=ref_mtime)
+        return vacuum_table(self.spark, self._identifier(model_name))
 
     def analyze(self, model_name: str, columns: bool = True) -> None:
         """ANALYZE TABLE — compute row-count/size (and per-column NDV,
@@ -1402,10 +1270,8 @@ class FalSpark:
     def is_table_model(self, model_name: str) -> bool:
         """True when the model materializes as files (table/incremental/
         seed) — the only shapes compact/analyze apply to."""
-        for m in self.manifest.models.values():
-            if m.name == model_name:
-                return m.materialization not in ("view", "ephemeral")
-        return False
+        model = self._model(model_name)
+        return model is not None and model.materialization not in ("view", "ephemeral")
 
     def _require_table_model(self, model_name: str, verb: str) -> None:
         if not self.is_table_model(model_name):
@@ -1432,13 +1298,13 @@ class _ModelTask:
         model: DbtModel = fal.graph.node_attr(self.node, "model")
         spark = fal.spark
         log.debug("executing model %s (%s)", model.name, model.materialization)
+        identifier = f"{fal.schema}.{model.target_name}"
         if model.materialization == "seed":
             df = spark.read.csv(str(model.path), header=True, inferSchema=True)
-            write_table(df, f"{fal.schema}.{model.target_name}", mode="overwrite")
+            write_table(df, identifier, **model.layout)
             return SUCCESS
         if model.python_model is not None:
             return self._run_python_model(model)
-        identifier = f"{fal.schema}.{model.target_name}"
         exists = spark.catalog.tableExists(identifier)
         full_refresh = getattr(fal, "_full_refresh", False)
         rendered, _ = render_model_sql(
@@ -1459,15 +1325,7 @@ class _ModelTask:
                 message="CREATE VIEW", code="CREATE VIEW", rows_affected=None
             )
             return SUCCESS
-        if mat == "incremental" and full_refresh:
-            # rebuild: atomic swap (the table may feed the model's own SQL)
-            if exists:
-                replace_relation_atomic(
-                    spark, df, identifier, partition_by=model.partition_by
-                )
-            else:
-                write_table(df, identifier, mode="overwrite", partition_by=model.partition_by)
-        elif mat == "incremental":
+        if mat == "incremental" and not full_refresh:
             if exists:
                 # batch size BEFORE the merge: the batch plan reads `this`
                 # (max-watermark subquery), whose files the atomic swap
@@ -1485,29 +1343,13 @@ class _ModelTask:
                 identifier,
                 model.unique_key,
                 strategy=model.incremental_strategy,
-                partition_by=model.partition_by,
                 on_schema_change=model.on_schema_change,
-                bucket_by=model.bucket_by,
-                sort_by=model.sort_by,
+                **model.layout,
             )
             if exists:
                 df.unpersist()
-        else:  # table
-            if exists:
-                replace_relation_atomic(
-                    spark, df, identifier,
-                    bucket_by=model.bucket_by, sort_by=model.sort_by,
-                    partition_by=model.partition_by,
-                )
-            else:
-                write_table(
-                    df,
-                    identifier,
-                    mode="overwrite",
-                    partition_by=model.partition_by,
-                    bucket_by=model.bucket_by,
-                    sort_by=model.sort_by,
-                )
+        else:  # table, or an incremental model's full refresh
+            write_table(df, identifier, **model.layout)
         if mat == "incremental" and not full_refresh and exists:
             # reference semantics: rows affected by THIS batch, not the
             # post-merge table total (fal_script.py:87-91)
@@ -1562,8 +1404,8 @@ class _ModelTask:
             # model-scoped write_to_model: the target is THIS model
             # (reference fal models omit the name — orders_forecast.py:57).
             # Flag only AFTER the write succeeds: flipping it before
-            # validation let a caught TypeError path count as "wrote" and
-            # report stale-table success (r12 review)
+            # validation would let a caught TypeError count as "wrote"
+            # and report stale-table success
             _bound_write(df, *a, **kw)
             wrote["called"] = True
 
@@ -1595,8 +1437,8 @@ class _ModelTask:
         fn = namespace.get("model")
         # alias-aware: materialize and read back under target_name, the
         # same identifier ref() resolution / bootstrap / docs use — a
-        # config.alias'd python model otherwise writes schema.name while
-        # downstream refs read schema.alias (ADVICE r11, medium)
+        # config.alias'd python model must not write schema.name while
+        # downstream refs read schema.alias
         identifier = f"{fal.schema}.{model.target_name}"
         if fn is None:
             # fal-style script model: the body must have materialized
@@ -1612,11 +1454,7 @@ class _ModelTask:
             df = fn(dbt_obj, fal.spark)
             if df is None:
                 raise ValueError(f"python model {model.name} returned no DataFrame")
-            df = fal._to_spark(df)
-            if fal.spark.catalog.tableExists(identifier):
-                replace_relation_atomic(fal.spark, df, identifier)
-            else:
-                write_table(df, identifier, mode="overwrite")
+            write_table(fal._to_spark(df), identifier, **model.layout)
         n = fal.spark.table(identifier).count()
         fal._adapter_responses[model.name] = CurrentAdapterResponse(
             message=f"CREATE TABLE {n}", code="CREATE TABLE", rows_affected=n
@@ -1686,12 +1524,9 @@ class _ModelTask:
             )
             df = fal.spark.read.parquet(out)
             identifier = f"{fal.schema}.{model.target_name}"
-            if fal.spark.catalog.tableExists(identifier):
-                replace_relation_atomic(fal.spark, df, identifier)
-            else:
-                write_table(df, identifier, mode="overwrite")
-            # count INSIDE the tempdir scope: write_table/replace copy the
-            # data into the warehouse, but the lazy df still points at td
+            write_table(df, identifier, **model.layout)
+            # count INSIDE the tempdir scope: write_table copies the data
+            # into the warehouse, but the lazy df still points at td
             n = fal.spark.table(identifier).count()
         fal._adapter_responses[model.name] = CurrentAdapterResponse(
             message=f"CREATE TABLE {n}", code="CREATE TABLE", rows_affected=n

@@ -3,23 +3,42 @@
 The reference delegates materialization to dbt macros + warehouse DDL
 (reference: projects/adapter/src/dbt/include/fal/macros/materializations/
 table.sql, atomic swap at src/fal/dbt/integration/lib.py:286-329,424-472);
-here the engine owns them:
+here the engine owns them. Every write that makes a relation hold a
+DataFrame is one call, ``write_table`` (the reference's
+``overwrite_target``), in the relation's declared layout:
 
-- seed        CSV → saveAsTable
-- table       CREATE OR REPLACE via saveAsTable(overwrite)
+- absent table    create it (saveAsTable)
+- existing table  replace it atomically (``replace_relation_atomic``):
+                  a copy-on-write pointer flip — write a fresh
+                  ``<name>__v<uuid8>`` dir, then ALTER TABLE SET LOCATION —
+                  or, when the table is hive-partitioned or its schema or
+                  bucket spec changed, a drop-first temp-swap (write
+                  ``<name>__f__<uuid8>``, drop, rename)
+
+Per materialization:
+
+- seed        CSV → write_table
+- table       write_table
 - view        lazy temp view over the rendered SQL
 - ephemeral   same as view (Catalyst inlines it; no storage)
-- incremental first run full table; then append, or merge-by-key via
-              anti-join + union with the reference's temp-swap protocol
+- incremental write_table on the first run and on a full refresh; then
+              append, insert_overwrite, or merge-by-key via anti-join +
+              union + replace_relation_atomic
 
-Scale notes: tables are parquet in the session warehouse; the temp-swap
-(write ``<name>__f__<uuid8>``, drop, rename) is exactly the reference's
-atomic-overwrite dance — on Delta this would be a transactional REPLACE.
+Tables are parquet under their database's catalog location; on Delta or
+Iceberg the swap would be a transactional REPLACE TABLE.
 """
 
 from __future__ import annotations
 
+import collections
+import os
+import re
+import shutil
+import threading
+import time
 import uuid
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -29,25 +48,29 @@ def _q(ident: str) -> str:
     return ".".join(f"`{p}`" for p in ident.split("."))
 
 
+def table_dir(spark: SparkSession, identifier: str) -> str | None:
+    """Local path of a table's un-suffixed directory: where a managed
+    saveAsTable lands and the base its copy-on-write version dirs are
+    named after. Derived from the database's catalog location, not
+    ``spark.sql.warehouse.dir`` — a profile ``warehouse_dir`` creates the
+    database elsewhere. None when the database lives on a remote store."""
+    parts = identifier.split(".")
+    db = parts[-2] if len(parts) > 1 else spark.catalog.currentDatabase()
+    loc = urlparse(spark.catalog.getDatabase(db).locationUri)
+    if loc.scheme not in ("", "file"):
+        return None
+    return os.path.join(unquote(loc.path), parts[-1].lower())
+
+
 def _clean_orphan_location(spark: SparkSession, identifier: str) -> None:
     """A table directory left by a previous session (the in-memory catalog
     forgets tables across sessions; their warehouse dirs persist) blocks
     saveAsTable with LOCATION_ALREADY_EXISTS — remove it when the catalog
     has no such table."""
-    import os
-    import shutil
-    from urllib.parse import urlparse
-
     if spark.catalog.tableExists(identifier):
         return
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", ""))
-    if wh.scheme not in ("", "file"):
-        return
-    parts = identifier.split(".")
-    table = parts[-1].lower()
-    db = parts[-2].lower() if len(parts) > 1 else "default"
-    loc = os.path.join(wh.path, f"{db}.db" if db != "default" else "", table)
-    if os.path.isdir(loc):
+    loc = table_dir(spark, identifier)
+    if loc is not None and os.path.isdir(loc):
         shutil.rmtree(loc, ignore_errors=True)
 
 
@@ -56,14 +79,21 @@ def layout_cols(spec) -> list[str]:
     comma-string form (``"k1, k2"``) and the YAML/Jinja list form
     (``["k1", "k2"]``) for partition_by / sort_by / bucket_by-cols /
     unique_key (reference: dbt-core node config); normalizing here means
-    every writer and maintenance path handles both — a list previously
-    reached ``str(x).split(',')`` and produced bracketed garbage column
-    names (r10 adversarial review finding)."""
+    every writer and maintenance path handles both — a list must never
+    reach ``str(x).split(',')``, which yields bracketed column names."""
     if spec is None:
         return []
     if isinstance(spec, (list, tuple)):
         return [str(c).strip() for c in spec if str(c).strip()]
     return [c.strip() for c in str(spec).split(",") if c.strip()]
+
+
+def _bucket_spec(bucket_by: dict | None) -> tuple[int, tuple[str, ...]] | None:
+    """(num_buckets, bucket_cols) of a ``bucket_by`` config, the shape
+    ``_table_bucket_spec`` reads back from the catalog."""
+    if not bucket_by:
+        return None
+    return int(bucket_by.get("n", 32)), tuple(layout_cols(bucket_by["cols"]))
 
 
 def _range_cluster(df: DataFrame, sort_by) -> DataFrame:
@@ -79,34 +109,50 @@ def _range_cluster(df: DataFrame, sort_by) -> DataFrame:
     return df.repartitionByRange(*cols).sortWithinPartitions(*cols)
 
 
+def _layout_writer(df: DataFrame, partition_by, bucket_by: dict | None, sort_by):
+    """Overwrite-mode parquet writer for ``df`` in the declared layout.
+    ``partition_by`` lays the table out hive-partitioned (partition
+    pruning + per-partition overwrite both need it). ``bucket_by`` =
+    {"cols": "k1,k2", "n": 32} hash-buckets (and sorts) the table on its
+    join key — every later equi-join between tables bucketed the same
+    way reads co-partitioned data and plans with ZERO shuffle exchanges
+    (asserted by tests/test_bucketing.py). ``sort_by`` range-clusters
+    files for min/max data skipping (see _range_cluster)."""
+    if sort_by and not bucket_by:
+        df = _range_cluster(df, sort_by)
+    writer = df.write.mode("overwrite").format("parquet")
+    if partition_by:
+        writer = writer.partitionBy(*layout_cols(partition_by))
+    spec = _bucket_spec(bucket_by)
+    if spec:
+        n, cols = spec
+        writer = writer.bucketBy(n, *cols).sortBy(*cols)
+    return writer
+
+
 def write_table(
     df: DataFrame,
     identifier: str,
-    mode: str = "overwrite",
+    *,
     partition_by: str | None = None,
     bucket_by: dict | None = None,
     sort_by: str | None = None,
 ) -> None:
-    """Eager write — the write boundary forces materialization, matching
-    the reference's eager write_to_* semantics (SURVEY §7 risk note).
-    ``partition_by`` lays the table out hive-partitioned (the 100 TB
-    contract: partition pruning + per-partition overwrite both need it).
-    ``bucket_by`` = {"cols": "k1,k2", "n": 32} hash-buckets (and sorts)
-    the table on its join key — every later equi-join between tables
-    bucketed the same way reads co-partitioned data and plans with ZERO
-    shuffle exchanges (asserted by tests/test_bucketing.py).
-    ``sort_by`` range-clusters files for min/max data skipping
-    (see _range_cluster)."""
-    if sort_by and not bucket_by:
-        df = _range_cluster(df, sort_by)
-    _clean_orphan_location(df.sparkSession, identifier)
-    writer = df.write.mode(mode).format("parquet")
-    if partition_by:
-        writer = writer.partitionBy(*layout_cols(partition_by))
-    if bucket_by:
-        cols = layout_cols(bucket_by["cols"])
-        writer = writer.bucketBy(int(bucket_by.get("n", 32)), *cols).sortBy(*cols)
-    writer.saveAsTable(identifier)
+    """Make ``identifier`` hold ``df`` in the declared layout — the one
+    write every materialization goes through. An absent table is created;
+    an existing one is replaced atomically (``replace_relation_atomic``,
+    safe when ``df`` reads the table itself). Eager: the write boundary
+    forces materialization, matching the reference's eager write_to_*
+    semantics (SURVEY §7 risk note)."""
+    spark = df.sparkSession
+    if spark.catalog.tableExists(identifier):
+        replace_relation_atomic(
+            spark, df, identifier,
+            partition_by=partition_by, bucket_by=bucket_by, sort_by=sort_by,
+        )
+        return
+    _clean_orphan_location(spark, identifier)
+    _layout_writer(df, partition_by, bucket_by, sort_by).saveAsTable(identifier)
 
 
 _VERSION_RE = r"__v[0-9a-f]{8}$"
@@ -114,25 +160,22 @@ _VERSION_RE = r"__v[0-9a-f]{8}$"
 # Per-table-base commit locks for the pointer flip: a maintenance verb
 # (compact) and a model rebuild racing on the SAME table must serialize
 # their check-then-flip sections, or last-writer-wins silently replaces
-# the rebuild's fresh data with recompacted stale data (r14 review).
+# the rebuild's fresh data with recompacted stale data.
 # In-process only — one driver owns a parquet warehouse by design; a
 # multi-writer deployment needs a transactional table format (Delta/
 # Iceberg), not file locks. defaultdict single-key access is GIL-atomic
 # (the environments.py _ENSURE_LOCKS precedent).
-import collections as _collections
-import threading as _threading
-
-_FLIP_LOCKS: dict[str, _threading.Lock] = _collections.defaultdict(_threading.Lock)
+_FLIP_LOCKS: dict[str, threading.Lock] = collections.defaultdict(threading.Lock)
 
 # Version directories some in-process writer is CURRENTLY producing
 # (registered before the expensive saveAsTable, cleared after commit or
 # cleanup). Every vacuum path keeps them: a concurrent writer's
 # half-written dir matches the version pattern and is in nobody's
 # keep set, so without this registry a racing flip's trailing vacuum
-# could rmtree it mid-write (r14 review). In-process only, same
-# single-driver scope as _FLIP_LOCKS.
+# could rmtree it mid-write. In-process only, same single-driver scope
+# as _FLIP_LOCKS.
 _INFLIGHT_DIRS: set[str] = set()
-_INFLIGHT_LOCK = _threading.Lock()
+_INFLIGHT_LOCK = threading.Lock()
 
 
 def inflight_version_dirs() -> set[str]:
@@ -155,17 +198,14 @@ def table_swap_token(spark: SparkSession, identifier: str):
     dir) but NOT drop-first swaps — RENAME TO lands a rebuilt
     hive-partitioned table on the same canonical path every time. For
     those, the per-commit NONCE carries the version: every committed
-    swap rewrites the live pointer file with a fresh uuid (ADVICE r14 —
-    the previous mtime-only fallback compared equal when a rebuild
-    landed in the same coarse-filesystem tick as the token capture,
-    letting compact commit stale data undetected). The directory mtime
+    swap rewrites the live pointer file with a fresh uuid (an mtime
+    alone compares equal when a rebuild lands in the same
+    coarse-filesystem tick as the token capture, letting compact commit
+    stale data undetected). The directory mtime
     rides along as a third component for in-place writes that bypass
     the swap path (incremental appends touch the dir but not the
     pointer). Pre-pointer tables and non-local locations degrade
     gracefully (nonce/mtime None)."""
-    import os
-    from urllib.parse import urlparse
-
     loc = _table_location(spark, identifier)
     if loc is None:
         return None
@@ -182,15 +222,11 @@ def table_swap_token(spark: SparkSession, identifier: str):
 
 def _re_sub_version(loc: str) -> str:
     """Strip the ``__v<uuid8>`` suffix off a version-dir path."""
-    import re as _re
-
-    return _re.sub(_VERSION_RE, "", loc.rstrip("/"))
+    return re.sub(_VERSION_RE, "", loc.rstrip("/"))
 
 
 def _table_location(spark: SparkSession, identifier: str) -> str | None:
     """Filesystem path of a table's current location (None if absent)."""
-    from urllib.parse import urlparse
-
     if not spark.catalog.tableExists(identifier):
         return None
     for r in spark.sql(f"DESCRIBE TABLE EXTENDED {_q(identifier)}").collect():
@@ -227,8 +263,6 @@ def _live_pointer_path(base: str) -> str:
     successful pointer flip). '_'-prefixed so a parquet reader listing
     the parent never sees it as data; a plain file so _vacuum_versions
     (dirs only) never removes it."""
-    import os
-
     return os.path.join(os.path.dirname(base), f"_{os.path.basename(base)}.__live__")
 
 
@@ -236,7 +270,7 @@ def _write_live_pointer(base: str, loc: str) -> None:
     """Atomically persist the live location (tmp file + rename). Line 1
     is the location; line 2 is a fresh per-commit NONCE — the version
     component table_swap_token uses for drop-first swaps, whose
-    committed location never changes (ADVICE r14: dir mtime alone has
+    committed location never changes (dir mtime alone has
     coarse-filesystem ticks).
 
     A writer killed between mkstemp and the rename (the in-process
@@ -244,15 +278,13 @@ def _write_live_pointer(base: str, loc: str) -> None:
     behind; they are invisible to readers ('.'-prefixed, and
     _vacuum_versions removes only dirs) but accumulate in the db dir
     across crashes, so each successful write opportunistically reaps
-    stale ones (r16 adversarial review). The 1-hour age floor keeps a
-    CONCURRENT writer's milliseconds-old tmp file safe."""
-    import os
+    stale ones. The 1-hour age floor keeps a CONCURRENT writer's
+    milliseconds-old tmp file safe."""
     import tempfile
-    import time as _time
 
     parent = os.path.dirname(base)
     try:
-        cutoff = _time.time() - 3600
+        cutoff = time.time() - 3600
         for f in os.listdir(parent):
             if f.startswith(".__live_tmp_"):
                 p = os.path.join(parent, f)
@@ -282,8 +314,8 @@ def _write_live_pointer(base: str, loc: str) -> None:
 
 
 def _read_live_pointer(base: str) -> str | None:
-    """Line 1 of the pointer file: the live location (single-line files
-    written before r15 parse identically — no nonce line, that's all)."""
+    """Line 1 of the pointer file: the live location (single-line
+    pointer files without a nonce line parse identically)."""
     try:
         with open(_live_pointer_path(base)) as f:
             loc = f.readline().strip()
@@ -294,7 +326,7 @@ def _read_live_pointer(base: str) -> str | None:
 
 def _read_live_nonce(base: str) -> str | None:
     """Line 2 of the pointer file: the per-commit nonce (None for
-    pre-r15 pointer files and pointerless tables)."""
+    single-line pointer files and pointerless tables)."""
     try:
         with open(_live_pointer_path(base)) as f:
             f.readline()
@@ -310,15 +342,15 @@ def _vacuum_versions(base: str, keep: set[str], keep_newer_than: float | None = 
     is strictly newer than ``keep_newer_than`` (epoch seconds). The
     mtime guard serves two callers: the swap's grace-window tail passes
     ``now - retainSeconds`` (time-based reader protection), and
-    FalSpark.vacuum passes the live pointer's mtime so a version dir a
+    vacuum_table passes the live pointer's mtime so a version dir a
     CONCURRENT rebuild is still writing — newer than the last committed
     flip — is never deleted mid-flip. Returns dirs removed.
 
     The in-flight writer registry (_INFLIGHT_DIRS) is consulted PER
-    DIRECTORY, immediately before each rmtree (ADVICE r14): a caller-
-    supplied snapshot taken before the listdir leaves a window where a
-    writer registers + creates its dir between the snapshot and the
-    delete loop reaching it. The per-dir re-check closes that window
+    DIRECTORY, immediately before each rmtree: a caller-supplied
+    snapshot taken before the listdir leaves a window where a writer
+    registers + creates its dir between the snapshot and the delete
+    loop reaching it. The per-dir re-check closes that window
     completely: writers register BEFORE creating the directory, so any
     listed dir that is mid-write is registered by the time we re-check
     — and a dir that re-checks as unregistered can never become a write
@@ -326,18 +358,14 @@ def _vacuum_versions(base: str, keep: set[str], keep_newer_than: float | None = 
     suffixes and never reused.
 
     The LIVE POINTER is also re-read per directory, AFTER the in-flight
-    check (ADVICE r15): a concurrent rebuild that commits its flip and
-    deregisters between the caller's ``keep`` snapshot and this loop
-    reaching its dir would otherwise have its now-live version dir
-    deleted. Order matters — writers deregister only after the pointer
-    rewrite (both happen inside the flip's registration window), so a
-    dir that re-checks as unregistered either was never a rebuild
-    target or already has the pointer naming it live. Checking the
-    pointer first would leave a TOCTOU gap the other way around."""
-    import os
-    import re as _re
-    import shutil
-
+    check: a concurrent rebuild that commits its flip and deregisters
+    between the caller's ``keep`` snapshot and this loop reaching its
+    dir would otherwise have its now-live version dir deleted. Order
+    matters — writers deregister only after the pointer rewrite (both
+    happen inside the flip's registration window), so a dir that
+    re-checks as unregistered either was never a rebuild target or
+    already has the pointer naming it live. Checking the pointer first
+    would leave a TOCTOU gap the other way around."""
     name = os.path.basename(base)
     parent = os.path.dirname(base)
     keep_abs = {os.path.abspath(k) for k in keep}
@@ -345,7 +373,7 @@ def _vacuum_versions(base: str, keep: set[str], keep_newer_than: float | None = 
     for d in os.listdir(parent) if os.path.isdir(parent) else []:
         p = os.path.join(parent, d)
         if (
-            (d == name or _re.fullmatch(_re.escape(name) + _VERSION_RE[:-1], d))
+            (d == name or _is_version_of(name, d))
             and os.path.abspath(p) not in keep_abs
             and os.path.isdir(p)
         ):
@@ -369,18 +397,89 @@ def _vacuum_versions(base: str, keep: set[str], keep_newer_than: float | None = 
     return removed
 
 
-def _default_location(spark: SparkSession, identifier: str) -> str:
-    """Canonical warehouse path for a table name (version-suffix base)."""
-    import os
-    from urllib.parse import urlparse
+def _is_version_of(name: str, dirname: str) -> bool:
+    """``dirname`` is a ``<name>__v<uuid8>`` copy-on-write version dir."""
+    return re.fullmatch(re.escape(name) + _VERSION_RE[:-1], dirname) is not None
 
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse"))
-    parts = identifier.split(".")
-    table = parts[-1].lower()
-    db = parts[-2].lower() if len(parts) > 1 else "default"
-    return os.path.join(
-        os.path.abspath(wh.path), f"{db}.db" if db != "default" else "", table
-    )
+
+def vacuum_table(spark: SparkSession, identifier: str) -> int:
+    """Delete a table's non-live copy-on-write version directories (the
+    atomic swap keeps ONE previous version as a grace window for
+    in-flight readers — see replace_relation_atomic; Delta's VACUUM
+    analogue). Readers with long scans are additionally protected by
+    ``RETAIN_CONF`` (version dirs modified within the window survive,
+    Delta's retention check). A CONCURRENT rebuild is guarded two ways:
+    version dirs newer than the last committed flip (the live pointer
+    file's mtime) are skipped, so a half-written swap target is never
+    deleted mid-flip; and because a flip can commit BETWEEN our catalog
+    read and the pointer-mtime read (making the new live dir look both
+    non-live and old), the pointer's CONTENT and the catalog location
+    are re-read AFTER capturing the mtime and unioned into the keep set
+    — the post-flip live dir can never be deleted. Returns the number of
+    dirs removed (0 for an absent table)."""
+    live = _table_location(spark, identifier)
+    if live is None:
+        return 0
+    base = _re_sub_version(live)
+    try:
+        ref_mtime = os.path.getmtime(_live_pointer_path(base))
+    except OSError:  # pointerless table: fall back to the live dir
+        ref_mtime = os.path.getmtime(live) if os.path.isdir(live) else None
+    retain = float(spark.conf.get(RETAIN_CONF, "0") or "0")
+    if retain > 0 and ref_mtime is not None:
+        ref_mtime = min(ref_mtime, time.time() - retain)
+    # TOCTOU guard: a flip committing between the _table_location read
+    # above and the getmtime above leaves the NEW live dir outside keep
+    # with an mtime older than the fresh pointer. Re-read both sources
+    # now — after ref_mtime is pinned — so that dir is protected
+    # whichever side of our reads the flip landed. Dirs an in-process
+    # writer is still producing are kept by _vacuum_versions' per-dir
+    # registry check.
+    keep = {live}
+    ptr = _read_live_pointer(base)
+    if ptr:
+        keep.add(ptr)
+    relive = _table_location(spark, identifier)
+    if relive:
+        keep.add(relive)
+    return _vacuum_versions(base, keep=keep, keep_newer_than=ref_mtime)
+
+
+def _has_committed_parquet(root: str) -> bool:
+    """``root`` holds committed data: a parquet file outside '_'/'.'-
+    prefixed paths. Interrupted writes leave only _SUCCESS markers or
+    _temporary staging files, and committed parquet never lives under
+    such a path (hive partition dirs are 'col=value')."""
+    for dirpath, dirnames, filenames in os.walk(root):
+        dirnames[:] = [d for d in dirnames if not d.startswith(("_", "."))]
+        if any(f.endswith(".parquet") and not f.startswith(("_", ".")) for f in filenames):
+            return True
+    return False
+
+
+def live_version_dir(spark: SparkSession, identifier: str) -> str | None:
+    """The directory holding a table's live data, found on disk — for
+    re-attaching a table the in-memory catalog forgot across sessions.
+    The live pointer each successful flip writes names it; without a
+    usable pointer, the newest-mtime candidate (the table dir or one of
+    its ``__v<uuid8>`` version dirs) with committed parquet wins — which
+    can pick a version that committed its parquet but crashed before
+    SET LOCATION, the gap the pointer closes. None when nothing on disk
+    holds committed data."""
+    base = table_dir(spark, identifier)
+    if base is None:
+        return None
+    ptr = _read_live_pointer(base)
+    if ptr and os.path.isdir(ptr) and _has_committed_parquet(ptr):
+        return ptr
+    parent, name = os.path.split(base)
+    candidates = [base] + [
+        os.path.join(parent, d)
+        for d in (os.listdir(parent) if os.path.isdir(parent) else [])
+        if _is_version_of(name, d)
+    ]
+    live = [c for c in candidates if os.path.isdir(c) and _has_committed_parquet(c)]
+    return max(live, key=os.path.getmtime) if live else None
 
 
 def replace_relation_atomic(
@@ -407,35 +506,30 @@ def replace_relation_atomic(
       Version dirs older than the grace window are vacuumed here.
       This is the plain-parquet rendition of Delta/Iceberg snapshot
       isolation; on a transactional lakehouse it is REPLACE TABLE.
-    - Hive-partitioned tables or a changed schema: drop-first temp-swap
-      (per-partition catalog locations and table schemas cannot be
-      flipped atomically in a v1 catalog) — use insert_overwrite for
-      reader-safe partitioned refreshes.
+    - Hive-partitioned tables, a changed schema or bucket spec, or an
+      absent table: drop-first temp-swap (per-partition catalog
+      locations and table schemas cannot be flipped atomically in a v1
+      catalog) — use insert_overwrite for reader-safe partitioned
+      refreshes.
 
     ``bucket_by``/``sort_by``/``partition_by`` carry the declared layout
     through the swap — a rebuild that silently flattened a partitioned
     or bucketed table would void the partition-pruning /
     zero-shuffle-join contract the model config declared.
 
-    ``expected_token`` (r14, maintenance verbs): optimistic
-    concurrency for read-then-replace callers. compact() rewrites the
-    data it READ — if another writer commits between that read and this
-    swap, flipping anyway would silently replace the newer rebuild with
-    recompacted stale data (lost update). Passing the
-    ``table_swap_token`` the caller captured before reading makes the
-    commit conditional: the check and the flip run under a per-table
-    lock (_FLIP_LOCKS — model rebuilds take the same lock, so
-    in-process check-then-flip is atomic), and a moved token raises
-    ConcurrentRebuildError after cleaning up the never-made-live
-    version directory. Rebuilds themselves pass None: the model's own
-    output is the newest truth regardless of what it read."""
-    import os
-    import re as _re
-    import shutil
-
+    ``expected_token`` (maintenance verbs): optimistic concurrency for
+    read-then-replace callers. compact() rewrites the data it READ — if
+    another writer commits between that read and this swap, flipping
+    anyway would silently replace the newer rebuild with recompacted
+    stale data (lost update). Passing the ``table_swap_token`` the
+    caller captured before reading makes the commit conditional: the
+    check and the flip run under a per-table lock (_FLIP_LOCKS — model
+    rebuilds take the same lock, so in-process check-then-flip is
+    atomic), and a moved token raises ConcurrentRebuildError after
+    cleaning up the never-made-live version directory. Rebuilds
+    themselves pass None: the model's own output is the newest truth
+    regardless of what it read."""
     tmp = f"{identifier}__f__{uuid.uuid4().hex[:8]}"
-    if sort_by and not bucket_by:
-        df = _range_cluster(df, sort_by)
 
     def _check_expected():
         if expected_token is not None:
@@ -456,35 +550,18 @@ def replace_relation_atomic(
     # stale for the pointer flip
     _sig = lambda s: [(f.name, f.dataType.simpleString()) for f in s.fields]  # noqa: E731
     schema_changed = exists and _sig(spark.table(identifier).schema) != _sig(df.schema)
-
-    def _layout(writer):
-        if partition_by:
-            writer = writer.partitionBy(*layout_cols(partition_by))
-        if bucket_by:
-            cols = layout_cols(bucket_by["cols"])
-            writer = writer.bucketBy(int(bucket_by.get("n", 32)), *cols).sortBy(*cols)
-        return writer
-
     # the pointer flip reuses the live table's metadata, so the declared
     # bucket layout must already match it (e.g. a table re-attached after
     # a restart has no bucket spec) — otherwise rebuild the metadata too
-    want_buckets = (
-        (
-            int(bucket_by.get("n", 32)),
-            tuple(layout_cols(bucket_by["cols"])),
-        )
-        if bucket_by
-        else None
-    )
-    bucket_mismatch = exists and _table_bucket_spec(spark, identifier) != want_buckets
-
+    bucket_mismatch = exists and _table_bucket_spec(spark, identifier) != _bucket_spec(bucket_by)
+    writer = _layout_writer(df, partition_by, bucket_by, sort_by)
     commit_lock = _FLIP_LOCKS[identifier.lower()]
 
     if partition_by or schema_changed or bucket_mismatch or not exists:
-        # drop-first temp-swap (the pre-r7 flow); the expensive write
-        # happens before the lock — only the catalog swap serializes
+        # drop-first temp-swap; the expensive write happens before the
+        # lock — only the catalog swap serializes
         try:
-            _layout(df.write.mode("overwrite").format("parquet")).saveAsTable(tmp)
+            writer.saveAsTable(tmp)
             with commit_lock:
                 _check_expected()
                 spark.sql(f"DROP TABLE IF EXISTS {_q(identifier)}")
@@ -494,30 +571,24 @@ def replace_relation_atomic(
                     # RENAME keeps per-partition catalog locations pointing at
                     # the temp path — SYNC re-registers the moved directories
                     spark.sql(f"MSCK REPAIR TABLE {_q(identifier)} SYNC PARTITIONS")
-                # The nonce rewrite must be atomic with the catalog swap
-                # (ADVICE r15): with the pointer written outside the lock, a
-                # maintenance verb running _check_expected under the lock
-                # between the RENAME and the pointer rewrite reads the STALE
-                # nonce — and if the dir mtime lands in the same coarse
-                # filesystem tick, its expected_token compares equal and it
-                # commits recompacted stale data over the fresh rebuild.
+                # The nonce rewrite must be atomic with the catalog swap:
+                # with the pointer written outside the lock, a maintenance
+                # verb running _check_expected under the lock between the
+                # RENAME and the pointer rewrite reads the STALE nonce —
+                # and if the dir mtime lands in the same coarse filesystem
+                # tick, its expected_token compares equal and it commits
+                # recompacted stale data over the fresh rebuild.
                 committed = _table_location(spark, identifier)
                 if committed:
-                    _write_live_pointer(
-                        _re.sub(_VERSION_RE, "", committed.rstrip("/")), committed
-                    )
+                    _write_live_pointer(_re_sub_version(committed), committed)
         except Exception:
             spark.sql(f"DROP TABLE IF EXISTS {_q(tmp)}")
             raise
         return
 
-    # copy-on-write pointer flip
+    # copy-on-write pointer flip (the table exists, so it has a location)
     old_loc = _table_location(spark, identifier)
-    base = (
-        _re.sub(_VERSION_RE, "", old_loc.rstrip("/"))
-        if old_loc
-        else _default_location(spark, identifier)
-    )
+    base = _re_sub_version(old_loc)
     new_loc = f"{base}__v{uuid.uuid4().hex[:8]}"
     flipped = False
     with _INFLIGHT_LOCK:
@@ -526,9 +597,7 @@ def replace_relation_atomic(
         try:
             # option("path") makes tmp EXTERNAL: dropping it later removes
             # only metadata, never the files the live table now points at
-            _layout(
-                df.write.mode("overwrite").format("parquet").option("path", new_loc)
-            ).saveAsTable(tmp)
+            writer.option("path", new_loc).saveAsTable(tmp)
             with commit_lock:
                 _check_expected()
                 spark.sql(f"ALTER TABLE {_q(identifier)} SET LOCATION '{new_loc}'")
@@ -545,7 +614,7 @@ def replace_relation_atomic(
             # must roll the pointer back to old_loc first — rmtree'ing the
             # directory the catalog points at would brick every later read.
             safe_to_delete = not flipped
-            if flipped and old_loc:
+            if flipped:
                 try:
                     spark.sql(f"ALTER TABLE {_q(identifier)} SET LOCATION '{old_loc}'")
                     spark.sql(f"REFRESH TABLE {_q(identifier)}")
@@ -559,25 +628,22 @@ def replace_relation_atomic(
         with _INFLIGHT_LOCK:
             _INFLIGHT_DIRS.discard(new_loc)
     spark.sql(f"DROP TABLE IF EXISTS {_q(tmp)}")
-    # vacuum versions beyond the grace window: always keep the live dir,
-    # the immediately previous one, and any version dir an in-process
-    # writer is currently producing (r14 review; since r15 the in-flight
-    # registry is re-checked per directory INSIDE _vacuum_versions —
-    # ADVICE r14 — so a writer registering after this call starts is
-    # still safe); with RETAIN_CONF set, also keep anything modified
-    # within the retention window (slow-reader cover). The catalog
-    # location and live pointer are RE-READ here (not reused from the
-    # flip above): a concurrent rebuild of the same table may have
-    # committed — and deregistered its dir — between our flip and this
-    # vacuum, making ITS dir the live one; the stale {new_loc, old_loc}
-    # pair alone would let us delete it. That snapshot is itself racy
-    # (ADVICE r15: a rebuild committing between this read and the delete
-    # loop reaching its dir), which is why _vacuum_versions ALSO re-reads
-    # the live pointer per directory before each rmtree.
-    import time as _time
-
+    # vacuum versions beyond the grace window: always keep the live dir
+    # and the immediately previous one; _vacuum_versions re-checks the
+    # in-flight registry per directory, so a version dir an in-process
+    # writer is producing survives even if it registers after this call
+    # starts. With RETAIN_CONF set, also keep anything modified within
+    # the retention window (slow-reader cover). The catalog location and
+    # live pointer are RE-READ here (not reused from the flip above): a
+    # concurrent rebuild of the same table may have committed — and
+    # deregistered its dir — between our flip and this vacuum, making
+    # ITS dir the live one; the stale {new_loc, old_loc} pair alone
+    # would let us delete it. That snapshot is itself racy (a rebuild
+    # committing between this read and the delete loop reaching its
+    # dir), which is why _vacuum_versions ALSO re-reads the live pointer
+    # per directory before each rmtree.
     retain = float(spark.conf.get(RETAIN_CONF, "0") or "0")
-    keep = {new_loc, old_loc or ""}
+    keep = {new_loc, old_loc}
     cur_live = _table_location(spark, identifier)
     if cur_live:
         keep.add(cur_live)
@@ -587,7 +653,7 @@ def replace_relation_atomic(
     _vacuum_versions(
         base,
         keep=keep,
-        keep_newer_than=(_time.time() - retain) if retain > 0 else None,
+        keep_newer_than=(time.time() - retain) if retain > 0 else None,
     )
 
 
@@ -662,15 +728,16 @@ def incremental_merge(
     (see `_evolve_schema`).
 
     ``bucket_by``/``sort_by`` carry the model's declared layout through
-    the first-run write and the merge swap — without them an
-    incremental model's bucket/cluster contract was silently flattened
-    (the append path needs nothing: insertInto on a bucketed table
-    honors the catalog's bucket spec, verified by bucket-suffixed
-    output files in tests/test_round10_fixes.py).
+    the first-run write and the merge swap, so neither flattens the
+    model's bucket/cluster contract (the append path needs nothing:
+    insertInto on a bucketed table honors the catalog's bucket spec,
+    verified by bucket-suffixed output files in
+    tests/test_round10_fixes.py). Every strategy aligns the batch's
+    columns to the table's by name before the positional insertInto.
     """
     if not spark.catalog.tableExists(identifier):
         write_table(
-            new_rows, identifier, mode="overwrite",
+            new_rows, identifier,
             partition_by=partition_by, bucket_by=bucket_by, sort_by=sort_by,
         )
         return
@@ -817,7 +884,7 @@ def snapshot_scd2(
         )
 
     if not spark.catalog.tableExists(identifier):
-        write_table(_with_meta(staged, valid_from), identifier, mode="overwrite")
+        write_table(_with_meta(staged, valid_from), identifier)
         return
 
     existing = spark.table(identifier)

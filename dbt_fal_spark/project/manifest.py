@@ -85,6 +85,16 @@ class DbtModel:
         return self.materialization == "incremental"
 
     @property
+    def layout(self) -> dict:
+        """The declared file layout, as the keyword arguments every
+        materialize writer takes."""
+        return {
+            "partition_by": self.partition_by,
+            "bucket_by": self.bucket_by,
+            "sort_by": self.sort_by,
+        }
+
+    @property
     def environment(self) -> str | None:
         """Named isolated environment for this model's scripts
         (reference: meta.fal.environment → packages/environments)."""

@@ -31,9 +31,7 @@ TESTDATA_TABLES = (
 )
 
 
-# Columns written as parquet TIMESTAMP(NANOS) — Spark has no nanos timestamp
-# type, so they are read as raw int64 (legacy conf) and truncated to micros,
-# matching DuckDB's own nanos→micros truncation.
+# Columns written as parquet TIMESTAMP(NANOS) (see read_source).
 _NANOS_TS_COLS = {"events": ("ts",)}
 
 # Catalog-metadata cache: `spark.read.parquet` re-reads footers and re-infers
@@ -44,6 +42,33 @@ _NANOS_TS_COLS = {"events": ("ts",)}
 _SCAN_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 
 
+def read_source(
+    spark: SparkSession, path: str, fmt: str = "parquet", nanos_cols=()
+) -> DataFrame:
+    """Lazy scan of a file source with the timestamp fixups every source
+    read applies: ``nanos_cols`` written as parquet TIMESTAMP(NANOS) —
+    Spark has no nanos timestamp type — are read as raw int64 (legacy
+    conf) and truncated to micros, matching DuckDB's own nanos→micros
+    truncation; and naive timestamps read as TIMESTAMP_NTZ under Spark 4
+    defaults become TIMESTAMP (callers may pass any SparkSession, so the
+    session-level inferTimestampNTZ=false in session.py cannot be
+    assumed). NTZ forbids numeric casts (epoch math) and diverges from
+    DuckDB's epoch(); with the session tz pinned UTC the LTZ cast is
+    wall-value identical."""
+    if nanos_cols:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = spark.read.format(fmt).load(path)
+    dtypes = dict(df.dtypes)
+    for col in nanos_cols:
+        if dtypes.get(col) == "bigint":
+            # integer division: ns values (~1.7e18) exceed double precision
+            df = df.withColumn(col, F.timestamp_micros(F.expr(f"`{col}` div 1000")))
+    for col, dtype in df.dtypes:
+        if dtype.startswith("timestamp_ntz"):
+            df = df.withColumn(col, F.col(col).cast("timestamp"))
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Lazy parquet scan for one testdata table (predicate/column pushdown
     stays available because nothing is materialized here)."""
@@ -51,21 +76,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     cached = _SCAN_CACHE.get(key)
     if cached is not None:
         return cached
-    if name in _NANOS_TS_COLS:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    for col in _NANOS_TS_COLS.get(name, ()):
-        if dict(df.dtypes).get(col) == "bigint":
-            # integer division: ns values (~1.7e18) exceed double precision
-            df = df.withColumn(col, F.timestamp_micros(F.expr(f"`{col}` div 1000")))
-    # Naive parquet timestamps read as TIMESTAMP_NTZ under Spark 4 defaults
-    # (the driver hands us arbitrary sessions, so the session-level
-    # inferTimestampNTZ=false in session.py cannot be assumed). NTZ forbids
-    # numeric casts (epoch math) and diverges from DuckDB's epoch(); with
-    # the session tz pinned UTC the LTZ cast is wall-value identical.
-    for col, dtype in df.dtypes:
-        if dtype.startswith("timestamp_ntz"):
-            df = df.withColumn(col, F.col(col).cast("timestamp"))
+    df = read_source(
+        spark, os.path.join(sf_dir, f"{name}.parquet"),
+        nanos_cols=_NANOS_TS_COLS.get(name, ()),
+    )
     _SCAN_CACHE[key] = df
     return df
 

@@ -111,6 +111,22 @@ def test_target_switch_changes_warehouse_and_context(spark, profiled_project, tm
         spark.sql(f"DROP DATABASE IF EXISTS {tgt} CASCADE")
 
 
+def test_orphan_dir_under_profile_warehouse_is_cleaned(spark, profiled_project, tmp_path):
+    """A directory an interrupted write left at a table's path (only
+    ``_temporary`` staging, no committed data) blocks saveAsTable with
+    LOCATION_ALREADY_EXISTS. The cleanup must look where the profile's
+    ``warehouse_dir`` put the database, not under the session warehouse."""
+    spark.sql("DROP DATABASE IF EXISTS profiled_dev CASCADE")
+    staging = tmp_path / "wh_dev" / "profiled_dev.db" / "one" / "_temporary" / "0"
+    staging.mkdir(parents=True)
+    (staging / "part-00000.parquet").write_bytes(b"")
+    dev = FalSpark(profiled_project, spark=spark)
+    statuses = dev.run()
+    assert all(s == "success" for s in statuses.values()), statuses
+    assert dev.ref("one").collect()[0]["x"] == 1
+    spark.sql("DROP DATABASE IF EXISTS profiled_dev CASCADE")
+
+
 def test_profiles_dir_explicit(profiled_project, tmp_path, monkeypatch):
     """--profiles-dir (reference: args.py:45-52): an explicit dir is
     authoritative — its profiles.yml wins over the project-local one,

@@ -397,6 +397,13 @@ def test_incremental_model_keeps_declared_bucket_layout(spark, tmp_path):
     assert data_files and all(re.search(r"_\d{5}\.c\d+", f) for f in data_files)
     assert spark.table(fal._identifier("merged")).count() == 50
     assert spark.table(fal._identifier("appended")).count() == 40
+    # a full refresh rebuilds the table in the same declared layout
+    statuses = fal.run(full_refresh=True)
+    assert all(s == "success" for s in statuses.values()), statuses
+    for m in ("merged", "appended"):
+        assert _table_bucket_spec(spark, fal._identifier(m)) == (4, ("k",)), (
+            f"{m}: full refresh flattened the bucket layout"
+        )
     spark.sql("DROP DATABASE IF EXISTS incbkt CASCADE")
 
 
