@@ -115,7 +115,7 @@ def _model_bound_write(fal: "FalSpark", model: "DbtModel"):
                 "target_1/target_2 — it writes to its own model"
             )
         kw.setdefault("mode", "overwrite")
-        fal.write_to_model(df, model.name, **kw)
+        return fal.write_to_model(df, model.name, **kw)
 
     return _write
 
@@ -204,6 +204,8 @@ class FalSpark:
         # per-model adapter response from the LAST materialization
         # (reference: model.adapter_response → Context.current_model)
         self._adapter_responses: dict[str, CurrentAdapterResponse] = {}
+        # unique_id -> seconds spent materializing the node in the last run
+        self._execution_times: dict[str, float] = {}
         self.target_dir = self.project_dir / "target"
         # last-run statuses (reference: project.py:406-411 maps
         # run_results onto each node's .status at load): a prior run's
@@ -496,7 +498,7 @@ class FalSpark:
         *,
         dtype: dict[str, str] | None = None,
         mode: str = "overwrite",
-    ) -> None:
+    ) -> int:
         """Eager write (reference: project.py:803-853; default overwrite).
         Writes carry the target model's DECLARED layout (partition_by /
         bucket_by / sort_by) — a script overwrite must not flatten a
@@ -505,7 +507,7 @@ class FalSpark:
         and aligns columns by name before the positional insertInto (a
         reordered-column df must not land values in the wrong columns).
         ``df`` may be a pandas DataFrame (the reference's currency) —
-        converted at this boundary."""
+        converted at this boundary. Returns the number of rows written."""
         name = target_2 or target_1
         df = apply_dtype_casts(self._to_spark(df), dtype)
         model = self._model(name)
@@ -513,11 +515,12 @@ class FalSpark:
         identifier = f"{self.schema}.{model.target_name if model is not None else name}"
         layout = model.layout if model is not None else {}
         if mode == "overwrite":
-            write_table(df, identifier, **layout)
+            n = write_table(df, identifier, **layout)
         else:
-            incremental_merge(self.spark, df, identifier, None, strategy="append", **layout)
+            n = incremental_merge(self.spark, df, identifier, None, strategy="append", **layout)
         if model is not None:
             model.status = "success"
+        return n
 
     def write_to_source(
         self,
@@ -627,6 +630,7 @@ class FalSpark:
         # dbt --full-refresh: incremental models rebuild from scratch this
         # run (is_incremental() renders False; the table is overwritten)
         self._full_refresh = full_refresh
+        self._execution_times = {}
         threads = threads if threads is not None else self.threads
         selected = select_nodes(self.graph, select, exclude, state=self._load_state())
         # defer scope: refs from selected nodes to models NOT in this set
@@ -784,13 +788,25 @@ class FalSpark:
         )
 
     def _write_run_results(self, statuses: dict[str, str], elapsed: float, context: dict) -> None:
-        """dbt-format-ish run_results.json (reference: flow_runner.py:86-133)."""
+        """dbt-format-ish run_results.json (reference: flow_runner.py:86-133).
+        Per node, as dbt writes them: ``status``, ``execution_time`` (0 for
+        a node that did not run) and ``adapter_response`` (``_message``,
+        ``code``, ``rows_affected``; empty unless the node succeeded)."""
         self.target_dir.mkdir(exist_ok=True)
+        results = []
+        for uid, status in sorted(statuses.items()):
+            resp = self._adapter_responses.get(self.graph.node_attr(uid, "model").name)
+            results.append({
+                "unique_id": uid,
+                "status": status,
+                "execution_time": self._execution_times.get(uid, 0.0),
+                "adapter_response": {
+                    "_message": resp.message, "code": resp.code, "rows_affected": resp.rows_affected,
+                } if resp is not None and status == "success" else {},
+            })
         payload = {
             "elapsed_time": elapsed,
-            "results": [
-                {"unique_id": uid, "status": status} for uid, status in sorted(statuses.items())
-            ],
+            "results": results,
             "errors": context.get("errors", []),
         }
         with open(self.target_dir / "run_results.json", "w") as f:
@@ -986,14 +1002,13 @@ class FalSpark:
                 if t.store_failures:
                     # dbt convention: failing rows land in the audit
                     # schema <schema>_dbt_test__audit.<test_name>,
-                    # replaced per run. Write FIRST and count the
-                    # written table: counting fail_df separately would
+                    # replaced per run. The violation count is the write's
+                    # own row count: counting fail_df separately would
                     # run the whole pipeline twice, and under limit() the
                     # two jobs could even select different rows.
                     audit = f"{self.schema}_dbt_test__audit"
                     self.spark.sql(f"CREATE DATABASE IF NOT EXISTS `{audit}`")
-                    write_table(fail_df, f"{audit}.{t.name}")
-                    violations = self.spark.table(f"{audit}.{t.name}").count()
+                    violations = write_table(fail_df, f"{audit}.{t.name}")
                 else:
                     violations = fail_df.count()
                 # dbt status resolution: severity=error checks error_if
@@ -1294,6 +1309,13 @@ class _ModelTask:
         self.node = node
 
     def execute(self, context: dict) -> int:
+        t0 = time.time()
+        try:
+            return self._materialize()
+        finally:
+            self.fal._execution_times[self.node] = time.time() - t0
+
+    def _materialize(self) -> int:
         fal = self.fal
         model: DbtModel = fal.graph.node_attr(self.node, "model")
         spark = fal.spark
@@ -1301,7 +1323,10 @@ class _ModelTask:
         identifier = f"{fal.schema}.{model.target_name}"
         if model.materialization == "seed":
             df = spark.read.csv(str(model.path), header=True, inferSchema=True)
-            write_table(df, identifier, **model.layout)
+            n = write_table(df, identifier, **model.layout)
+            fal._adapter_responses[model.name] = CurrentAdapterResponse(
+                message=f"INSERT {n}", code="INSERT", rows_affected=n
+            )
             return SUCCESS
         if model.python_model is not None:
             return self._run_python_model(model)
@@ -1326,18 +1351,10 @@ class _ModelTask:
             )
             return SUCCESS
         if mat == "incremental" and not full_refresh:
-            if exists:
-                # batch size BEFORE the merge: the batch plan reads `this`
-                # (max-watermark subquery), whose files the atomic swap
-                # replaces — counting afterwards hits FAILED_READ_FILE.
-                # Persist so the batch is computed ONCE: without it the
-                # count and the merge each execute the full model SQL,
-                # and a non-deterministic model could report a row count
-                # different from the rows actually merged. First run
-                # (no table) skips both — batch_rows is unused there.
-                df = df.persist()
-                batch_rows = df.count()
-            incremental_merge(
+            # a rerun reports the rows of THIS batch, not the post-merge
+            # table total (reference: fal_script.py:87-91); every count
+            # here comes from the write job itself
+            n = incremental_merge(
                 spark,
                 df,
                 identifier,
@@ -1346,17 +1363,10 @@ class _ModelTask:
                 on_schema_change=model.on_schema_change,
                 **model.layout,
             )
-            if exists:
-                df.unpersist()
+            code = "INSERT" if exists else "CREATE TABLE"
         else:  # table, or an incremental model's full refresh
-            write_table(df, identifier, **model.layout)
-        if mat == "incremental" and not full_refresh and exists:
-            # reference semantics: rows affected by THIS batch, not the
-            # post-merge table total (fal_script.py:87-91)
-            code, n = "INSERT", batch_rows
-        else:
-            # parquet footer count — metadata-only, no data scan
-            code, n = "CREATE TABLE", spark.table(identifier).count()
+            n = write_table(df, identifier, **model.layout)
+            code = "CREATE TABLE"
         fal._adapter_responses[model.name] = CurrentAdapterResponse(
             message=f"{code} {n}", code=code, rows_affected=n
         )
@@ -1396,7 +1406,9 @@ class _ModelTask:
         def _read(df: DataFrame):
             return df.toPandas() if pandas_mode else fal._with_pandas_alias(df)
 
-        wrote = {"called": False}
+        # rows the model table holds after the body's write_to_model
+        # calls: an overwrite resets the count, an append adds its batch
+        wrote: dict = {"called": False, "rows": 0}
 
         _bound_write = _model_bound_write(fal, model)
 
@@ -1406,7 +1418,8 @@ class _ModelTask:
             # Flag only AFTER the write succeeds: flipping it before
             # validation would let a caught TypeError count as "wrote"
             # and report stale-table success
-            _bound_write(df, *a, **kw)
+            n = _bound_write(df, *a, **kw)
+            wrote["rows"] = n if kw.get("mode", "overwrite") == "overwrite" else wrote["rows"] + n
             wrote["called"] = True
 
         namespace: dict = {
@@ -1449,13 +1462,13 @@ class _ModelTask:
                     "and its body never called write_to_model(...) — one of "
                     "the two contracts is required"
                 )
+            n = wrote["rows"]
         else:
             dbt_obj = _DbtObj(fal, model, pandas_meta=pandas_mode)
             df = fn(dbt_obj, fal.spark)
             if df is None:
                 raise ValueError(f"python model {model.name} returned no DataFrame")
-            write_table(fal._to_spark(df), identifier, **model.layout)
-        n = fal.spark.table(identifier).count()
+            n = write_table(fal._to_spark(df), identifier, **model.layout)
         fal._adapter_responses[model.name] = CurrentAdapterResponse(
             message=f"CREATE TABLE {n}", code="CREATE TABLE", rows_affected=n
         )
@@ -1524,10 +1537,7 @@ class _ModelTask:
             )
             df = fal.spark.read.parquet(out)
             identifier = f"{fal.schema}.{model.target_name}"
-            write_table(df, identifier, **model.layout)
-            # count INSIDE the tempdir scope: write_table copies the data
-            # into the warehouse, but the lazy df still points at td
-            n = fal.spark.table(identifier).count()
+            n = write_table(df, identifier, **model.layout)
         fal._adapter_responses[model.name] = CurrentAdapterResponse(
             message=f"CREATE TABLE {n}", code="CREATE TABLE", rows_affected=n
         )

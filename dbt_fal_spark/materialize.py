@@ -25,6 +25,22 @@ Per materialization:
               append, insert_overwrite, or merge-by-key via anti-join +
               union + replace_relation_atomic
 
+Every model write (``write_table`` and the incremental append,
+insert_overwrite and merge paths) sizes its files and counts its rows:
+
+- one file    an output whose Catalyst estimate (``optimizedPlan.stats.
+              sizeInBytes``) is at most ``spark.sql.files.maxPartitionBytes``
+              is written through a single-partition exchange
+              (``repartition(1)``), so a small model is one task and one
+              file instead of one per shuffle partition. ``coalesce(1)``
+              would also collapse the upstream stage. ``bucket_by`` and
+              ``sort_by`` layouts keep their own file layout, larger
+              outputs keep their plan, and ``compact()`` writes its
+              explicit target through ``replace_relation_atomic``.
+- row count   an ``Observation`` on the written DataFrame counts the rows
+              inside the write job; the write returns it, so no second job
+              reads the table back to report ``rows_affected``.
+
 Tables are parquet under their database's catalog location; on Delta or
 Iceberg the swap would be a transactional REPLACE TABLE.
 """
@@ -40,8 +56,10 @@ import time
 import uuid
 from urllib.parse import unquote, urlparse
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+from dbt_fal_spark.sources.readers import conf_bytes
 
 
 def _q(ident: str) -> str:
@@ -109,6 +127,31 @@ def _range_cluster(df: DataFrame, sort_by) -> DataFrame:
     return df.repartitionByRange(*cols).sortWithinPartitions(*cols)
 
 
+def _one_file_if_small(df: DataFrame, bucket_by: dict | None, sort_by) -> DataFrame:
+    """``df`` through a single-partition exchange when Catalyst estimates
+    it fits one file (at most ``spark.sql.files.maxPartitionBytes``); a
+    bucket_by or sort_by layout, or a larger estimate, keeps its plan.
+    ``repartition(1)`` rather than ``coalesce(1)``: the exchange keeps the
+    upstream stage's parallelism, e.g. a model's own repartition before a
+    Python UDF."""
+    if bucket_by or sort_by:
+        return df
+    limit = conf_bytes(df.sparkSession, "spark.sql.files.maxPartitionBytes", 134217728)
+    try:
+        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except Exception:  # internal plan API unavailable (connect/foreign session)
+        return df
+    return df.repartition(1) if size <= limit else df
+
+
+def _counted(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` counting its rows as the write job runs; read the count with
+    ``obs.get["rows"]`` after the write. One uniquely named Observation
+    per write, so concurrent model writes never share a name."""
+    obs = Observation(f"rows_written_{uuid.uuid4().hex}")
+    return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
+
+
 def _layout_writer(df: DataFrame, partition_by, bucket_by: dict | None, sort_by):
     """Overwrite-mode parquet writer for ``df`` in the declared layout.
     ``partition_by`` lays the table out hive-partitioned (partition
@@ -137,22 +180,25 @@ def write_table(
     partition_by: str | None = None,
     bucket_by: dict | None = None,
     sort_by: str | None = None,
-) -> None:
+) -> int:
     """Make ``identifier`` hold ``df`` in the declared layout — the one
     write every materialization goes through. An absent table is created;
     an existing one is replaced atomically (``replace_relation_atomic``,
-    safe when ``df`` reads the table itself). Eager: the write boundary
-    forces materialization, matching the reference's eager write_to_*
-    semantics (SURVEY §7 risk note)."""
+    safe when ``df`` reads the table itself). A small output is one file
+    (``_one_file_if_small``). Eager: the write boundary forces
+    materialization, matching the reference's eager write_to_* semantics
+    (SURVEY §7 risk note). Returns the number of rows written."""
     spark = df.sparkSession
+    df, obs = _counted(_one_file_if_small(df, bucket_by, sort_by))
     if spark.catalog.tableExists(identifier):
         replace_relation_atomic(
             spark, df, identifier,
             partition_by=partition_by, bucket_by=bucket_by, sort_by=sort_by,
         )
-        return
-    _clean_orphan_location(spark, identifier)
-    _layout_writer(df, partition_by, bucket_by, sort_by).saveAsTable(identifier)
+    else:
+        _clean_orphan_location(spark, identifier)
+        _layout_writer(df, partition_by, bucket_by, sort_by).saveAsTable(identifier)
+    return obs.get["rows"]
 
 
 _VERSION_RE = r"__v[0-9a-f]{8}$"
@@ -709,7 +755,7 @@ def incremental_merge(
     on_schema_change: str = "ignore",
     bucket_by: dict | None = None,
     sort_by: str | None = None,
-) -> None:
+) -> int:
     """Incremental strategies (reference: C5 — the adapter declares
     append / delete+insert / merge / insert_overwrite, fal/python/impl.py:
     256-291; dbt resolves ``get_incremental_{strategy}_sql``):
@@ -734,29 +780,32 @@ def incremental_merge(
     verified by bucket-suffixed output files in
     tests/test_round10_fixes.py). Every strategy aligns the batch's
     columns to the table's by name before the positional insertInto.
+
+    Returns the rows of this batch (on the first run, the new table's
+    rows), counted inside the write job.
     """
     if not spark.catalog.tableExists(identifier):
-        write_table(
+        return write_table(
             new_rows, identifier,
             partition_by=partition_by, bucket_by=bucket_by, sort_by=sort_by,
         )
-        return
     strategy = strategy or ("merge" if unique_key else "append")
     new_rows = _evolve_schema(spark, new_rows, identifier, on_schema_change)
     if strategy == "append":
-        new_rows.write.mode("append").format("parquet").insertInto(identifier)
-        return
+        batch, obs = _counted(_one_file_if_small(new_rows, bucket_by, sort_by))
+        batch.write.mode("append").format("parquet").insertInto(identifier)
+        return obs.get["rows"]
     if strategy == "insert_overwrite":
         if not partition_by:
             raise ValueError(f"{identifier}: insert_overwrite requires partition_by")
+        batch, obs = _counted(_one_file_if_small(new_rows, bucket_by, sort_by))
         prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         try:
-            cols = spark.table(identifier).columns  # insertInto is positional
-            new_rows.select(*cols).write.mode("overwrite").insertInto(identifier)
+            batch.write.mode("overwrite").insertInto(identifier)
         finally:
             spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-        return
+        return obs.get["rows"]
     if strategy not in ("merge", "delete+insert"):
         raise ValueError(f"{identifier}: unknown incremental strategy {strategy!r}")
     if unique_key is None:
@@ -768,13 +817,13 @@ def incremental_merge(
     # and swap atomically. The config name a dbt user writes must work.
     old = spark.table(identifier)
     keys = layout_cols(unique_key)  # dbt unique_key: str OR list
-    merged = old.join(new_rows.select(*keys).distinct(), on=keys, how="left_anti").unionByName(
-        new_rows.select(*old.columns)
-    )
+    batch, obs = _counted(new_rows.select(*old.columns))
+    merged = old.join(new_rows.select(*keys).distinct(), on=keys, how="left_anti").unionByName(batch)
     replace_relation_atomic(
-        spark, merged, identifier,
+        spark, _one_file_if_small(merged, bucket_by, sort_by), identifier,
         partition_by=partition_by, bucket_by=bucket_by, sort_by=sort_by,
     )
+    return obs.get["rows"]
 
 
 def apply_dtype_casts(df: DataFrame, dtype: dict[str, str] | None) -> DataFrame:

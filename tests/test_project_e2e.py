@@ -5,6 +5,7 @@ plus the query-correctness layer it lacks.
 
 from __future__ import annotations
 
+import json
 import os
 import tempfile
 from pathlib import Path
@@ -16,6 +17,9 @@ from dbt_fal_spark.api import FalSpark
 from tests.conftest import SF_DIR
 
 FIXTURES = Path(__file__).parent / "fixtures"
+# run_results.json of the jaffle fixture's full run, read before later
+# tests' runs rewrite it
+FULL_RUN_RESULTS: dict = {}
 
 
 @pytest.fixture(scope="module")
@@ -26,6 +30,7 @@ def jaffle(spark):
     spark.sql("DROP DATABASE IF EXISTS jaffle_spark CASCADE")
     fal = FalSpark(FIXTURES / "jaffle_spark", spark=spark)
     statuses = fal.run(threads=4)
+    FULL_RUN_RESULTS.update(json.loads((fal.target_dir / "run_results.json").read_text()))
     yield fal, statuses, marker.name
     os.unlink(marker.name)
 
@@ -123,13 +128,23 @@ def test_selector_subset_run(spark):
 
 
 def test_run_results_artifact(jaffle):
-    fal, _, _ = jaffle
-    path = fal.project_dir / "target" / "run_results.json"
-    assert path.exists()
-    import json
-
-    payload = json.loads(path.read_text())
-    assert {r["status"] for r in payload["results"]} == {"success"}
+    fal, statuses, _ = jaffle
+    assert (fal.project_dir / "target" / "run_results.json").exists()
+    results = FULL_RUN_RESULTS["results"]
+    assert {r["unique_id"] for r in results} == set(statuses)
+    assert {r["status"] for r in results} == {"success"}
+    # dbt's per-node fields: execution_time and adapter_response
+    models = {m.name: m for m in fal.list_models()}
+    for r in results:
+        name = r["unique_id"].split(".")[-1]
+        assert r["execution_time"] > 0, r
+        resp = r["adapter_response"]
+        if models[name].materialization in ("view", "ephemeral"):
+            assert resp == {"_message": "CREATE VIEW", "code": "CREATE VIEW", "rows_affected": None}
+        else:
+            assert resp["code"] == "CREATE TABLE", r
+            assert resp["rows_affected"] == fal.ref(name).count(), r
+            assert resp["_message"] == f"CREATE TABLE {resp['rows_affected']}"
 
 
 def test_list_api(jaffle):

@@ -4,8 +4,10 @@ BASELINE.md rule (r16 lesson): only compare cross-run minima ratios
 computed from the SAME number of runs on each side — the oracle's
 minima converge slower than the engine's, so unequal depths skew the
 ratio. Given two artifact prefixes and N, this sums per-query minima
-over runs 1..N of each series (engine and oracle sides independently)
-and prints both composites and the engine/oracle ratio per series.
+over the first D existing runs among 1..N of each series, D being the
+smaller series' count of existing runs (engine and oracle sides
+independently), and prints both composites and the engine/oracle ratio
+per series. Missing run files are reported on stderr.
 
 Usage: python tools/matched_depth_tally.py BENCH_PAIRED_r16opt_run BENCH_PAIRED_r17_run [N]
 """
@@ -17,17 +19,24 @@ import os
 import sys
 
 
-def tally(prefix: str, n: int) -> dict:
+def existing_runs(prefix: str, n: int) -> list[int]:
+    """Indices 1..n whose ``<prefix><i>.json`` exists; each missing one
+    is reported on stderr, because a gap shifts the series' depth."""
+    found = []
+    for i in range(1, n + 1):
+        if os.path.exists(f"{prefix}{i}.json"):
+            found.append(i)
+        else:
+            print(f"warning: {prefix}{i}.json missing", file=sys.stderr)
+    return found
+
+
+def tally(prefix: str, runs: list[int]) -> dict:
     eng: dict[str, float] = {}
     ora: dict[str, float] = {}
-    used = []
-    for i in range(1, n + 1):
-        path = f"{prefix}{i}.json"
-        if not os.path.exists(path):
-            continue
-        with open(path) as f:
+    for i in runs:
+        with open(f"{prefix}{i}.json") as f:
             doc = json.load(f)
-        used.append(i)
         for side, best in (("engine", eng), ("oracle", ora)):
             for name, sec in doc[side]["queries"].items():
                 if name not in best or sec < best[name]:
@@ -37,7 +46,7 @@ def tally(prefix: str, n: int) -> dict:
     o_tot = sum(ora[q] for q in shared)
     return {
         "prefix": prefix,
-        "runs_used": used,
+        "runs_used": runs,
         "n_queries": len(shared),
         "engine_min_composite_sec": round(e_tot, 3),
         "oracle_min_composite_sec": round(o_tot, 3),
@@ -48,10 +57,10 @@ def tally(prefix: str, n: int) -> dict:
 def main() -> None:
     a, b = sys.argv[1], sys.argv[2]
     n = int(sys.argv[3]) if len(sys.argv) > 3 else 17
-    ta, tb = tally(a, n), tally(b, n)
-    depth = min(len(ta["runs_used"]), len(tb["runs_used"]))
-    if len(ta["runs_used"]) != len(tb["runs_used"]):
-        ta, tb = tally(a, depth), tally(b, depth)
+    runs_a, runs_b = existing_runs(a, n), existing_runs(b, n)
+    # matched depth: both series tally their first `depth` existing runs
+    depth = min(len(runs_a), len(runs_b))
+    ta, tb = tally(a, runs_a[:depth]), tally(b, runs_b[:depth])
     print(json.dumps({"depth": depth, "a": ta, "b": tb}, indent=1))
 
 
