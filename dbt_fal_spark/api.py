@@ -36,12 +36,12 @@ from dbt_fal_spark.materialize import (
     write_table,
 )
 from dbt_fal_spark.plans.executor import parallel_executor
-from dbt_fal_spark.plans.node_graph import NodeGraph, NodeKind
-from dbt_fal_spark.plans.schedule import FAILURE, SUCCESS, Scheduler, TaskGroup
+from dbt_fal_spark.plans.node_graph import NodeGraph
+from dbt_fal_spark.plans.schedule import SUCCESS, Scheduler, TaskGroup
 from dbt_fal_spark.plans.selectors import model_checksums, select_nodes
 from dbt_fal_spark.project.jinja import render_model_sql
 from dbt_fal_spark.environments import load_environments
-from dbt_fal_spark.project.loader import load_profile, load_project
+from dbt_fal_spark.project.loader import load_profile, load_project, process_ipynb
 from dbt_fal_spark.project.manifest import DbtModel, DbtTest
 from dbt_fal_spark.session import get_spark
 from dbt_fal_spark.sources.readers import read_source
@@ -91,12 +91,10 @@ def _model_bound_write(fal: "FalSpark", model: "DbtModel"):
     """write_to_model bound to ONE model, the reference's
     ``functools.partial(write_to_model, target_1=model.name)``
     (fal_script.py): a positional target re-binds target_1 and raises
-    TypeError there — mirror that loudly instead of silently ignoring
-    it (ADVICE r11). ``target_2=`` is deliberately REJECTED here: the
-    reference's partial happens to let it slip through and silently
-    redirect the write to a different model — an accidental hole, not a
-    contract — so this binding raises TypeError on it too (documented
-    deviation, r12 review)."""
+    TypeError there, so it raises here too rather than being ignored.
+    ``target_2=`` is REJECTED as well, a documented deviation: the
+    reference's partial lets it through and silently redirects the write
+    to a different model, an accidental hole rather than a contract."""
 
     def _write(df, *_a, **kw):
         if _a:
@@ -106,10 +104,8 @@ def _model_bound_write(fal: "FalSpark", model: "DbtModel"):
                 "call it as write_to_model(data)"
             )
         if "target_1" in kw or "target_2" in kw:
-            # the reference's partial happens to let target_2= slip
-            # through to a DIFFERENT model — an accidental hole, not a
-            # contract; a bound write redirecting silently is the exact
-            # bug the positional guard exists to stop (r12 review)
+            # a bound write must never redirect to another model — the
+            # same bug the positional guard stops
             raise TypeError(
                 f"write_to_model bound to model {model.name!r} takes no "
                 "target_1/target_2 — it writes to its own model"
@@ -643,29 +639,17 @@ class FalSpark:
         )
         groups: dict[str, TaskGroup] = {}
         for node in order:
-            kind = self.graph.node_kind(node)
-            if kind == NodeKind.FAL_SCRIPT:
-                continue  # scripts attach to their model below
             model: DbtModel = self.graph.node_attr(node, "model")
-            pre = [
-                _ScriptTask(self, model, script)
-                for script in model.get_scripts(before=True)
-            ] + [_HookTask(self, model, h.path, h.arguments, h.environment) for h in model.get_hooks(pre=True)]
-            post = [
-                _ScriptTask(self, model, script)
-                for script in model.get_scripts(before=False)
-            ] + [_HookTask(self, model, h.path, h.arguments, h.environment) for h in model.get_hooks(pre=False)]
             groups[node] = TaskGroup(
                 group_id=node,
                 task=_ModelTask(self, node),
-                pre_hooks=pre,
-                post_hooks=post,
+                pre_hooks=self._side_tasks(model, before=True),
+                post_hooks=self._side_tasks(model, before=False),
             )
         for node, group in groups.items():
             for dep in self.graph.graph.predecessors(node):
                 if dep in groups:
                     group.dependencies.append(groups[dep])
-                # BEFORE-script predecessor: already a pre-hook
         scheduler = Scheduler(list(groups.values()))
         context: dict = {"errors": []}
         t0 = time.time()
@@ -683,11 +667,22 @@ class FalSpark:
             # record the RAW run outcome, not the derived property — a
             # skipped model with previously-run tests would otherwise
             # report 'tested' into run_results.json, masking the skip
-            # (r12 review)
             statuses[node] = raw
         self._write_run_results(statuses, time.time() - t0, context)
         self._write_state()
         return statuses
+
+    def _side_tasks(self, model: DbtModel, *, before: bool) -> list["_ScriptTask"]:
+        """The tasks that run around ``model``: its BEFORE scripts then
+        pre-hooks (``before=True``), or its AFTER scripts then post-hooks:
+        the pre/post tasks of the model's group. Scripts are not graph
+        nodes. ``run_scripts`` runs the same lists in the same order."""
+        return [
+            _ScriptTask(self, model, script) for script in model.get_scripts(before=before)
+        ] + [
+            _ScriptTask(self, model, h.path, h.arguments, environment=h.environment, is_hook=True)
+            for h in model.get_hooks(pre=before)
+        ]
 
     def snapshot(self, select: str | list[str] | None = None, as_of: str | None = None) -> dict[str, str]:
         """dbt snapshot: run every (or the selected) snapshot's select and
@@ -864,7 +859,8 @@ class FalSpark:
         ``use_last_run=False``, the reference's ``--all``). ``before``
         scopes which side runs — True = BEFORE scripts/pre-hooks only (the
         reference's `fal run --before`), False = AFTER/post only (the
-        reference's plain `fal run`), None = both (API convenience).
+        reference's plain `fal run`), None = both (API convenience). Each
+        model's side runs its scripts then its hooks, as in ``run``.
 
         GLOBAL scripts (schema.yml top-level ``fal:`` block) run once per
         invocation — before everything on the BEFORE side, after
@@ -880,20 +876,21 @@ class FalSpark:
         ran: list[str] = []
         context: dict = {"errors": []}
         sides = (True, False) if before is None else (before,)
-        # reference fal_runner.py:129-137: a --scripts filter applies to
-        # global scripts too — `fal run --scripts x.py --globals` runs
-        # only global scripts named in the filter
-        def _global_scripts(side: str) -> list[str]:
-            return [
-                s
-                for s in self.manifest.global_scripts[side]
-                if not only_scripts or s in only_scripts
-            ]
+
+        def _run(tasks: list[_ScriptTask], side: bool) -> None:
+            # a --scripts filter applies to global scripts too (reference
+            # fal_runner.py:129-137): `fal run --scripts x.py --globals`
+            # runs only the global scripts named in the filter
+            for task in tasks:
+                if not only_scripts or task.script in only_scripts:
+                    task.execute(context)
+                    ran.append(task.label(side))
+
+        def _globals(side: str) -> list[_ScriptTask]:
+            return [_ScriptTask(self, None, s) for s in self.manifest.global_scripts[side]]
 
         if run_globals and True in sides:
-            for script in _global_scripts("before"):
-                _ScriptTask(self, None, script).execute(context)
-                ran.append(f"script.GLOBAL.BEFORE.{script}")
+            _run(_globals("before"), True)
         selected = select_nodes(self.graph, select, exclude, state=self._load_state())
         if use_last_run:
             rr = self.target_dir / "run_results.json"
@@ -905,25 +902,11 @@ class FalSpark:
                 }
                 selected &= last
         for node in self.graph.sort_nodes():
-            if node not in selected or self.graph.node_kind(node) == NodeKind.FAL_SCRIPT:
-                continue
-            model: DbtModel = self.graph.node_attr(node, "model")
-            for side in sides:
-                for script in model.get_scripts(before=side):
-                    if only_scripts and script not in only_scripts:
-                        continue
-                    _ScriptTask(self, model, script).execute(context)
-                    ran.append(f"script.{model.name}.{'BEFORE' if side else 'AFTER'}.{script}")
-            for pre in sides:
-                for h in model.get_hooks(pre=pre):
-                    if only_scripts and h.path not in only_scripts:
-                        continue
-                    _HookTask(self, model, h.path, h.arguments, h.environment).execute(context)
-                    ran.append(f"hook.{model.name}.{'PRE' if pre else 'POST'}.{h.path}")
+            if node in selected:
+                for side in sides:
+                    _run(self._side_tasks(self.graph.node_attr(node, "model"), before=side), side)
         if run_globals and False in sides:
-            for script in _global_scripts("after"):
-                _ScriptTask(self, None, script).execute(context)
-                ran.append(f"script.GLOBAL.AFTER.{script}")
+            _run(_globals("after"), False)
         return ran
 
     def test(self, select: str | list[str] | None = None) -> list[dict]:
@@ -1309,27 +1292,33 @@ class _ModelTask:
         self.node = node
 
     def execute(self, context: dict) -> int:
-        t0 = time.time()
-        try:
-            return self._materialize()
-        finally:
-            self.fal._execution_times[self.node] = time.time() - t0
-
-    def _materialize(self) -> int:
         fal = self.fal
         model: DbtModel = fal.graph.node_attr(self.node, "model")
+        t0 = time.time()
+        try:
+            code, rows = self._materialize(model)
+        finally:
+            fal._execution_times[self.node] = time.time() - t0
+        # what the warehouse adapter would report (reference:
+        # fal_script.py:87-91): run_results.json and the model's after
+        # scripts and post-hooks read it
+        fal._adapter_responses[model.name] = CurrentAdapterResponse(
+            message=code if rows is None else f"{code} {rows}", code=code, rows_affected=rows
+        )
+        return SUCCESS
+
+    def _materialize(self, model: DbtModel) -> tuple[str, int | None]:
+        """Build and write the model; returns the adapter response code
+        and the rows the write job counted (None for a view)."""
+        fal = self.fal
         spark = fal.spark
         log.debug("executing model %s (%s)", model.name, model.materialization)
         identifier = f"{fal.schema}.{model.target_name}"
         if model.materialization == "seed":
             df = spark.read.csv(str(model.path), header=True, inferSchema=True)
-            n = write_table(df, identifier, **model.layout)
-            fal._adapter_responses[model.name] = CurrentAdapterResponse(
-                message=f"INSERT {n}", code="INSERT", rows_affected=n
-            )
-            return SUCCESS
+            return "INSERT", write_table(df, identifier, **model.layout)
         if model.python_model is not None:
-            return self._run_python_model(model)
+            return "CREATE TABLE", self._run_python_model(model)
         exists = spark.catalog.tableExists(identifier)
         full_refresh = getattr(fal, "_full_refresh", False)
         rendered, _ = render_model_sql(
@@ -1346,10 +1335,7 @@ class _ModelTask:
         if mat in ("view", "ephemeral"):
             fal._view_models.add(model.name)
             df.createOrReplaceTempView(fal._identifier(model.name))
-            fal._adapter_responses[model.name] = CurrentAdapterResponse(
-                message="CREATE VIEW", code="CREATE VIEW", rows_affected=None
-            )
-            return SUCCESS
+            return "CREATE VIEW", None
         if mat == "incremental" and not full_refresh:
             # a rerun reports the rows of THIS batch, not the post-merge
             # table total (reference: fal_script.py:87-91); every count
@@ -1363,18 +1349,13 @@ class _ModelTask:
                 on_schema_change=model.on_schema_change,
                 **model.layout,
             )
-            code = "INSERT" if exists else "CREATE TABLE"
-        else:  # table, or an incremental model's full refresh
-            n = write_table(df, identifier, **model.layout)
-            code = "CREATE TABLE"
-        fal._adapter_responses[model.name] = CurrentAdapterResponse(
-            message=f"{code} {n}", code=code, rows_affected=n
-        )
-        return SUCCESS
+            return ("INSERT" if exists else "CREATE TABLE"), n
+        # table, or an incremental model's full refresh
+        return "CREATE TABLE", write_table(df, identifier, **model.layout)
 
     def _run_python_model(self, model: DbtModel) -> int:
         """Python model execution, both contracts the reference family
-        supports:
+        supports; returns the rows the model table received.
 
         - dbt-style: ``def model(dbt, session) -> DataFrame`` (D3 —
           py_write wrapper, table.sql:34-46). The module body runs, then
@@ -1386,11 +1367,12 @@ class _ModelTask:
           parse.py:120-140): the body IS the model and must call
           ``write_to_model(...)`` (target defaults to this model).
 
-        pandas interop (the reference's data currency — project.py:
-        696-715 returns pandas from every read): opt in per model with
-        schema.yml ``meta: {fal: {interop: pandas}}`` or, dbt-style,
-        ``dbt.config(interop="pandas")`` — reads then hand the model
-        pandas frames and the returned/written frame may be pandas.
+        Either body runs with the globals a model-bound after script gets
+        (``_exec_python``). pandas interop (the reference's data currency
+        — project.py:696-715 returns pandas from every read): opt in per
+        model with schema.yml ``meta: {fal: {interop: pandas}}`` or,
+        dbt-style, ``dbt.config(interop="pandas")`` — reads then hand the
+        model pandas frames and the returned/written frame may be pandas.
         Without the opt-in, reads stay lazy Spark DataFrames carrying a
         ``.to_pandas()`` escape hatch, and pandas returns are still
         accepted. The pull to the driver happens only at these explicit
@@ -1398,18 +1380,10 @@ class _ModelTask:
         fal = self.fal
         if model.environment:
             return self._run_python_model_isolated(model)
-        code = model.python_model.read_text()
-        if model.python_model.suffix == ".ipynb":
-            code = _process_ipynb(code)
         pandas_mode = ((model.meta or {}).get("fal", {}) or {}).get("interop") == "pandas"
-
-        def _read(df: DataFrame):
-            return df.toPandas() if pandas_mode else fal._with_pandas_alias(df)
-
         # rows the model table holds after the body's write_to_model
         # calls: an overwrite resets the count, an append adds its batch
         wrote: dict = {"called": False, "rows": 0}
-
         _bound_write = _model_bound_write(fal, model)
 
         def _write(df, *a, **kw):
@@ -1422,37 +1396,14 @@ class _ModelTask:
             wrote["rows"] = n if kw.get("mode", "overwrite") == "overwrite" else wrote["rows"] + n
             wrote["called"] = True
 
-        namespace: dict = {
-            # reference contract: scripts/models execute as __main__
-            # (cli_tests/features/main_module.feature — `if __name__ ==
-            # "__main__":` blocks must run)
-            "__name__": "__main__",
-            "__file__": str(model.python_model),
-            "ref": lambda *parts: _read(fal.ref(parts[-1])),
-            "source": lambda s, t: _read(fal.source(s, t)),
-            "execute_sql": lambda q: _read(fal.execute_sql(q)),
-            "write_to_model": _write,
-            "session": fal.spark,
-            "context": Context(
-                current_model=CurrentModel(
-                    name=model.name,
-                    alias=model.target_name,
-                    status=model.status,
-                    columns=model.columns,
-                    tests=[],
-                    meta=model.meta,
-                    is_incremental=model.is_incremental,
-                ),
-                target=fal.target_name,
-            ),
-        }
-        exec(compile(code, str(model.python_model), "exec"), namespace)
-        fn = namespace.get("model")
-        # alias-aware: materialize and read back under target_name, the
-        # same identifier ref() resolution / bootstrap / docs use — a
-        # config.alias'd python model must not write schema.name while
-        # downstream refs read schema.alias
-        identifier = f"{fal.schema}.{model.target_name}"
+        overrides: dict = {"write_to_model": _write}
+        if pandas_mode:
+            overrides.update(
+                ref=lambda *parts: fal.ref(*parts).toPandas(),
+                source=lambda s, t: fal.source(s, t).toPandas(),
+                execute_sql=lambda q: fal.execute_sql(q).toPandas(),
+            )
+        fn = _exec_python(fal, model, model.python_model, **overrides).get("model")
         if fn is None:
             # fal-style script model: the body must have materialized
             # itself through the injected write_to_model
@@ -1462,17 +1413,13 @@ class _ModelTask:
                     "and its body never called write_to_model(...) — one of "
                     "the two contracts is required"
                 )
-            n = wrote["rows"]
-        else:
-            dbt_obj = _DbtObj(fal, model, pandas_meta=pandas_mode)
-            df = fn(dbt_obj, fal.spark)
-            if df is None:
-                raise ValueError(f"python model {model.name} returned no DataFrame")
-            n = write_table(fal._to_spark(df), identifier, **model.layout)
-        fal._adapter_responses[model.name] = CurrentAdapterResponse(
-            message=f"CREATE TABLE {n}", code="CREATE TABLE", rows_affected=n
-        )
-        return SUCCESS
+            return wrote["rows"]
+        df = fn(_DbtObj(fal, model, pandas_meta=pandas_mode), fal.spark)
+        if df is None:
+            raise ValueError(f"python model {model.name} returned no DataFrame")
+        # alias-aware: materialize under target_name, the identifier
+        # ref() resolution / bootstrap / docs use
+        return write_table(fal._to_spark(df), f"{fal.schema}.{model.target_name}", **model.layout)
 
     def _run_python_model_isolated(self, model: DbtModel) -> int:
         """Python model with ``meta.fal.environment``: run it in the named
@@ -1487,14 +1434,7 @@ class _ModelTask:
         A ``.ipynb`` model is not supported isolated (the env has no
         notebook strip step) — convert it to .py or drop the env."""
         fal = self.fal
-        try:
-            env = fal.environments[model.environment]
-        except KeyError:
-            raise ValueError(
-                f"model {model.name!r} wants environment {model.environment!r} "
-                "but fal_project.yml does not define it "
-                f"(defined: {', '.join(sorted(fal.environments)) or 'none'})"
-            ) from None
+        env, payload = _isolated(fal, model, model.environment)
         if model.python_model.suffix == ".ipynb":
             raise ValueError(
                 f"isolated execution of notebook model {model.name} is not "
@@ -1502,6 +1442,7 @@ class _ModelTask:
             )
         import tempfile
 
+        identifier = f"{fal.schema}.{model.target_name}"
         with tempfile.TemporaryDirectory(prefix="fal_isolated_") as td:
             relations: dict[str, str] = {}
             sources: dict[str, str] = {}
@@ -1520,28 +1461,92 @@ class _ModelTask:
             out = os.path.join(td, "out.parquet")
             env.run_python_model(
                 model.python_model,
-                {
-                    "relations": relations,
-                    "sources": sources,
-                    "out": out,
-                    "this": f"{fal.schema}.{model.target_name}",
-                    "current_model": {
-                        "name": model.name,
-                        "alias": model.target_name,
-                        "status": model.status,
-                        "meta": model.meta,
-                        "is_incremental": model.is_incremental,
-                    },
-                    "target": fal.target_name,
-                },
+                {**payload, "relations": relations, "sources": sources, "out": out, "this": identifier},
             )
-            df = fal.spark.read.parquet(out)
-            identifier = f"{fal.schema}.{model.target_name}"
-            n = write_table(df, identifier, **model.layout)
-        fal._adapter_responses[model.name] = CurrentAdapterResponse(
-            message=f"CREATE TABLE {n}", code="CREATE TABLE", rows_affected=n
-        )
-        return SUCCESS
+            return write_table(fal.spark.read.parquet(out), identifier, **model.layout)
+
+
+def _current_model(fal: FalSpark, model: DbtModel) -> CurrentModel:
+    """``context.current_model`` of a model's body, scripts and hooks."""
+    return CurrentModel(
+        name=model.name,
+        alias=model.target_name,
+        status=model.status,
+        columns=model.columns,
+        tests=[t for t in fal.manifest.tests.values() if t.model_id == model.unique_id],
+        meta=model.meta,
+        is_incremental=model.is_incremental,
+        adapter_response=fal._adapter_responses.get(model.name),
+    )
+
+
+def _exec_python(
+    fal: FalSpark, model: DbtModel | None, path: Path, arguments: dict | None = None, **overrides
+) -> dict:
+    """Run a script, hook or Python model body in this interpreter
+    (reference: FalScript.exec, fal_script.py:258-299) as ``__main__``
+    (cli_tests/features/main_module.feature — `if __name__ ==
+    "__main__":` blocks must run) with the injected globals: ``context``,
+    ``ref``/``source``/``execute_sql``, ``write_to_model`` (bound to
+    ``model``), ``write_to_source``, ``list_*`` and ``session``.
+    ``model=None`` is a global script: no current model, and
+    ``write_to_model`` takes an explicit target. ``overrides`` replace
+    single globals. Returns the module namespace."""
+    code = path.read_text()
+    if path.suffix == ".ipynb":
+        code = process_ipynb(code)
+    namespace = {
+        "__name__": "__main__",
+        "__file__": str(path),
+        "context": Context(
+            current_model=_current_model(fal, model) if model is not None else None,
+            arguments=arguments or {},
+            target=fal.target_name,
+        ),
+        "ref": fal.ref,
+        "source": fal.source,
+        "execute_sql": fal.execute_sql,
+        "write_to_source": fal.write_to_source,
+        "write_to_model": (
+            _model_bound_write(fal, model) if model is not None else fal.write_to_model
+        ),
+        "list_models": fal.list_models,
+        "list_models_ids": fal.list_models_ids,
+        "list_sources": fal.list_sources,
+        "list_tests": fal.list_tests,
+        "list_features": fal.list_features,
+        "session": fal.spark,
+        **overrides,
+    }
+    exec(compile(code, str(path), "exec"), namespace)
+    return namespace
+
+
+def _isolated(fal: FalSpark, model: DbtModel, env_name: str) -> tuple[Any, dict]:
+    """The named environment and the JSON handoff payload for running a
+    model's body, script or hook in it (reference: IsolatedHook →
+    environments). No SparkSession crosses the interpreter boundary, so
+    ``current_model`` travels as plain JSON."""
+    try:
+        env = fal.environments[env_name]
+    except KeyError:
+        raise ValueError(
+            f"model {model.name!r} wants environment {env_name!r} "
+            "but fal_project.yml does not define it "
+            f"(defined: {', '.join(sorted(fal.environments)) or 'none'})"
+        ) from None
+    resp = fal._adapter_responses.get(model.name)
+    return env, {
+        "current_model": {
+            "name": model.name,
+            "alias": model.target_name,
+            "status": model.status,
+            "meta": model.meta,
+            "is_incremental": model.is_incremental,
+            "adapter_response": dataclasses.asdict(resp) if resp is not None else None,
+        },
+        "target": fal.target_name,
+    }
 
 
 class _DbtObj:
@@ -1578,24 +1583,42 @@ class _ConfigCollector:
 
 
 class _ScriptTask:
-    """Run a before/after script with injected globals
+    """A before/after script or a pre/post hook, run in-process with the
+    injected globals (``_exec_python``) or in the model's environment
     (reference: FalScript.exec, fal_script.py:258-299). ``model=None``
     is the reference's GLOBAL script mode (fal_script.py:189 — a
     FalScript whose model is None): ``context.current_model`` is None
-    and ``write_to_model`` takes an explicit target name."""
+    and ``write_to_model`` takes an explicit target name.
+
+    A hook (``is_hook``, a meta.fal pre-/post-hook with `with:`
+    arguments) may override the environment (reference: fal_script.py:
+    43-83 create_hook, LocalHook vs IsolatedHook): a named
+    ``environment`` wins over the model's, the special name "local"
+    forces in-process, None inherits the model's."""
 
     def __init__(
-        self, fal: FalSpark, model: DbtModel | None, script: str, arguments: dict | None = None
+        self,
+        fal: FalSpark,
+        model: DbtModel | None,
+        script: str,
+        arguments: dict | None = None,
+        *,
+        environment: str | None = None,
+        is_hook: bool = False,
     ) -> None:
         self.fal = fal
         self.model = model
         self.script = script
         self.arguments = arguments or {}
-        # per-hook environment override (reference: fal_script.py:43-83
-        # create_hook): a named env wins over the model's; the special
-        # name "local" forces in-process; None inherits the model's
-        self.env_override: str | None = None
-        self.is_hook = False
+        self.env_override = environment
+        self.is_hook = is_hook
+
+    def label(self, before: bool) -> str:
+        """The name ``run_scripts`` reports, e.g. ``script.m.AFTER.x.py``."""
+        owner = self.model.name if self.model is not None else "GLOBAL"
+        if self.is_hook:
+            return f"hook.{owner}.{'PRE' if before else 'POST'}.{self.script}"
+        return f"script.{owner}.{'BEFORE' if before else 'AFTER'}.{self.script}"
 
     def execute(self, context: dict) -> int:
         fal = self.fal
@@ -1613,78 +1636,10 @@ class _ScriptTask:
         if self.env_override is not None:
             env_name = None if self.env_override == "local" else self.env_override
         if env_name:
-            # isolated execution (reference: IsolatedHook → environments):
-            # the script runs in the named venv's interpreter with the
-            # context shim; no SparkSession crosses the boundary.
-            try:
-                env = fal.environments[env_name]
-            except KeyError:
-                raise ValueError(
-                    f"model {model.name!r} wants environment {env_name!r} "
-                    "but fal_project.yml does not define it "
-                    f"(defined: {', '.join(sorted(fal.environments)) or 'none'})"
-                ) from None
-            env.run_script(
-                path,
-                {
-                    "current_model": {
-                        "name": model.name,
-                        "alias": model.target_name,
-                        "status": model.status,
-                        "meta": model.meta,
-                        "is_incremental": model.is_incremental,
-                        "adapter_response": (
-                            dataclasses.asdict(fal._adapter_responses[model.name])
-                            if model.name in fal._adapter_responses
-                            else None
-                        ),
-                    },
-                    "arguments": self.arguments,
-                    "target": fal.target_name,
-                },
-            )
+            env, payload = _isolated(fal, model, env_name)
+            env.run_script(path, {**payload, "arguments": self.arguments})
             return SUCCESS
-        code = path.read_text()
-        if path.suffix == ".ipynb":
-            code = _process_ipynb(code)
-        script_context = Context(
-            current_model=CurrentModel(
-                name=model.name,
-                alias=model.target_name,
-                status=model.status,
-                columns=model.columns,
-                tests=[t for t in fal.manifest.tests.values() if t.model_id == model.unique_id],
-                meta=model.meta,
-                is_incremental=model.is_incremental,
-                adapter_response=fal._adapter_responses.get(model.name),
-            )
-            if model is not None
-            else None,
-            arguments=self.arguments,
-            target=fal.target_name,
-        )
-        namespace = {
-            # reference: FalScript runs as the __main__ module
-            # (cli_tests/features/main_module.feature)
-            "__name__": "__main__",
-            "__file__": str(path),
-            "context": script_context,
-            "ref": fal.ref,
-            "source": fal.source,
-            "execute_sql": fal.execute_sql,
-            "write_to_source": fal.write_to_source,
-            "write_to_model": (
-                _model_bound_write(fal, model)
-                if model is not None
-                else fal.write_to_model
-            ),
-            "list_models": fal.list_models,
-            "list_models_ids": fal.list_models_ids,
-            "list_sources": fal.list_sources,
-            "list_tests": fal.list_tests,
-            "list_features": fal.list_features,
-            "session": fal.spark,
-        }
+        overrides = {}
         if self.is_hook:
             # hooks observe, they don't materialize (reference:
             # fal_script.py:284-296 — _not_allowed_function_maker replaces
@@ -1701,33 +1656,6 @@ class _ScriptTask:
 
                 return _raise
 
-            namespace["write_to_model"] = _not_allowed("write_to_model")
-            namespace["write_to_source"] = _not_allowed("write_to_source")
-        exec(compile(code, str(path), "exec"), namespace)
+            overrides = {name: _not_allowed(name) for name in ("write_to_model", "write_to_source")}
+        _exec_python(fal, model, path, self.arguments, **overrides)
         return SUCCESS
-
-
-class _HookTask(_ScriptTask):
-    """meta.fal pre-/post-hook with `with:` arguments and optional
-    per-hook `environment:` override (reference: fal_script.py:43-83
-    create_hook — LocalHook vs IsolatedHook selection)."""
-
-    def __init__(
-        self,
-        fal: FalSpark,
-        model: DbtModel,
-        path: str,
-        arguments: dict,
-        environment: str | None = None,
-    ) -> None:
-        super().__init__(fal, model, path, arguments)
-        self.env_override = environment
-        self.is_hook = True
-
-
-# moved to project/loader.py (model discovery needs it too); re-bound
-# here so script execution keeps one import site
-from dbt_fal_spark.project.loader import process_ipynb as _process_ipynb  # noqa: E402
-
-
-_ = FAILURE  # re-exported for task implementations

@@ -389,7 +389,7 @@ def main(argv: list[str] | None = None) -> int:
         # (+ @), tag:/path:/state: prefixes, comma-intersections, path
         # separators, AND the fnmatch glob set (* ? [) honored by
         # _name_match — 'stg_?' must route through the selector engine,
-        # not the exact-name branch (ADVICE r10)
+        # not the exact-name branch
         plain = lambda t: not any(ch in t for ch in "+:,*@/?[")  # noqa: E731
         if args.select and all(plain(t) for t in args.select) and not args.exclude:
             # plain model names: exact-name contract — unknown names and
@@ -409,7 +409,6 @@ def main(argv: list[str] | None = None) -> int:
             # through the same engine flow run uses, then — like bulk
             # mode — keep only table-materialized models (a tag sweep
             # legitimately matches views; they have no files to maintain)
-            from dbt_fal_spark.plans.node_graph import NodeKind
             from dbt_fal_spark.plans.selectors import select_nodes
 
             sel = select_nodes(
@@ -417,11 +416,9 @@ def main(argv: list[str] | None = None) -> int:
             )
             names = sorted(
                 {
-                    m.name
+                    name
                     for node in sel
-                    if fal.graph.node_kind(node) != NodeKind.FAL_SCRIPT
-                    and (m := fal.graph.node_attr(node, "model")) is not None
-                    and fal.is_table_model(m.name)
+                    if fal.is_table_model(name := fal.graph.node_attr(node, "model").name)
                 }
             )
             if not names:

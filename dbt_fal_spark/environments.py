@@ -50,6 +50,19 @@ import yaml
 _ENSURE_LOCKS: dict[str, threading.Lock] = collections.defaultdict(threading.Lock)
 
 
+# The ``context`` both child runners hand the user code: the parent's
+# current_model dict, hook arguments (empty for models) and target name.
+_CONTEXT_SHIM = (
+    "class _Ctx:\n"
+    "    pass\n"
+    "context = _Ctx()\n"
+    "context.current_model = payload['current_model']\n"
+    "context.arguments = payload.get('arguments', {})\n"
+    "context.target = payload['target']\n"
+    "context.result = None\n"
+)
+
+
 class _ScriptRunner:
     """Shared isolated-script protocol: subclasses provide ``ensure()``
     (returning the environment's interpreter) and ``name``; the JSON
@@ -66,18 +79,11 @@ class _ScriptRunner:
         ``context`` shim (current_model dict, arguments, target) and
         ``__file__``; status and any ``context['result']`` come back as
         JSON."""
-        python = self.ensure()
         runner = (
             "import json, sys\n"
             "payload = json.load(open(sys.argv[1]))\n"
-            "class _Ctx:\n"
-            "    pass\n"
-            "context = _Ctx()\n"
-            "context.current_model = payload['current_model']\n"
-            "context.arguments = payload['arguments']\n"
-            "context.target = payload['target']\n"
-            "context.result = None\n"
-            "ns = {'context': context, '__file__': payload['script'],\n"
+            + _CONTEXT_SHIM
+            + "ns = {'context': context, '__file__': payload['script'],\n"
             "      '__name__': '__main__'}\n"  # reference: main_module.feature
             "code = open(payload['script']).read()\n"
             "exec(compile(code, payload['script'], 'exec'), ns)\n"
@@ -154,13 +160,8 @@ class _ScriptRunner:
             "def write_to_model(df, *a, **kw):\n"
             "    df.to_parquet(payload['out'])\n"
             "    _state['written'] = True\n"
-            "class _Ctx:\n"
-            "    pass\n"
-            "context = _Ctx()\n"
-            "context.current_model = payload['current_model']\n"
-            "context.arguments = {}\n"
-            "context.target = payload['target']\n"
-            "class _Dbt:\n"
+            + _CONTEXT_SHIM
+            + "class _Dbt:\n"
             "    this = payload['this']\n"
             "    def config(self, **kw):\n"
             "        return ''\n"

@@ -9,7 +9,9 @@ src/fal/dbt/cli/selectors.py:13-65 plan build, :156-226 SelectorPlan,
 - ``model+``          node + descendants        (``model+n`` = n levels)
 - ``@model``          node + descendants + ancestors-of-descendants
 - ``tag:x``           nodes carrying tag x
-- ``script.py``       scripts by file name
+- ``script.py``       the model(s) whose ``meta.fal.scripts`` name that
+  file (scripts are not graph nodes; they run with their model), so
+  ``+after.py`` is the owning model and its ancestors
 - ``state:modified`` / ``state:new``  models whose checksum changed / that
   did not exist in the saved state (reference: selectors.py:228-242 routes
   these to dbt's state machinery; here the state is the checksum snapshot
@@ -95,11 +97,8 @@ def _name_match(name: str, pattern: str) -> bool:
 def _match_nodes(graph: NodeGraph, plan: SelectorPlan, state: dict[str, str] | None = None) -> set[str]:
     out: set[str] = set()
     for node in graph.graph.nodes:
-        attrs = graph.graph.nodes[node]
-        model = attrs.get("model")
+        model = graph.node_attr(node, "model")
         if plan.is_state:
-            if model is None:
-                continue
             prior = (state or {}).get(model.name)
             if plan.body == "new":
                 changed = prior is None
@@ -109,15 +108,11 @@ def _match_nodes(graph: NodeGraph, plan: SelectorPlan, state: dict[str, str] | N
                 out.add(node)
             continue
         if plan.is_tag:
-            if model is not None and any(
-                _name_match(t, plan.body) for t in (model.tags or [])
-            ):
+            if any(_name_match(t, plan.body) for t in (model.tags or [])):
                 out.add(node)
             continue
-        if attrs.get("kind") == "fal_script":
-            # select scripts by file name (reference: 'script.py' selectors)
-            if attrs.get("script") == plan.body:
-                out.add(node)
+        if any(plan.body in model.get_scripts(before=before) for before in (True, False)):
+            out.add(node)
             continue
         short = node.split(".")[-1]
         if _name_match(short, plan.body):
@@ -125,11 +120,10 @@ def _match_nodes(graph: NodeGraph, plan: SelectorPlan, state: dict[str, str] | N
             continue
         # path-form selector (dbt `path:` method / bare path terms like
         # models/staging/orders.sql): match the model file's trailing path
-        if model is not None and "/" in plan.body:
-            p = getattr(model, "path", None)
-            if p is not None and (
-                str(p).endswith("/" + plan.body.lstrip("/"))
-                or fnmatch.fnmatchcase(str(p), "*/" + plan.body.lstrip("/"))
+        if "/" in plan.body and model.path is not None:
+            p = str(model.path)
+            if p.endswith("/" + plan.body.lstrip("/")) or fnmatch.fnmatchcase(
+                p, "*/" + plan.body.lstrip("/")
             ):
                 out.add(node)
     return out

@@ -158,6 +158,21 @@ def test_select_exclude(diamond_graph):
     assert _names(select_nodes(diamond_graph, "+d", exclude="b")) == {"a", "c", "d"}
 
 
+def test_script_selector_selects_the_owning_model():
+    """Scripts are not graph nodes: a script-name selector matches the
+    model whose meta.fal.scripts names the file, and graph operators
+    expand from that model."""
+    m = _manifest({"a": [], "b": ["a"]})
+    m.models["model.t.a"].meta = {
+        "fal": {"scripts": {"before": ["scripts/before.py"], "after": ["scripts/after.py"]}}
+    }
+    g = NodeGraph.from_manifest(m)
+    assert select_nodes(g, "scripts/after.py") == {"model.t.a"}
+    assert _names(select_nodes(g, "+scripts/after.py")) == {"a"}
+    assert _names(select_nodes(g, "scripts/before.py+")) == {"a", "b"}
+    assert select_nodes(g, "scripts/other.py") == set()
+
+
 def test_selector_plan_parse():
     p = SelectorPlan.parse("2+model+3")
     assert p.ancestors and p.ancestor_levels == 2

@@ -637,3 +637,86 @@ def test_python_model_dbt_style_pandas_config(jaffle, tmp_path, spark):
     seg = {r["segment"]: r["n_customers"] for r in fal.ref("seg_pandas").collect()}
     assert sum(seg.values()) == fal.ref("customers").count()
     spark.sql("DROP DATABASE IF EXISTS jaffle_spark CASCADE")
+
+
+def test_script_selector_runs_the_owning_model(spark, tmp_path):
+    """Scripts are not graph nodes: a script-name selector selects the
+    model that declares the script, so `flow run --select
+    scripts/after.py` runs that model with both its scripts and `fal run`
+    with the same selector runs its scripts."""
+    import textwrap
+
+    proj = tmp_path / "scriptsel"
+    (proj / "models").mkdir(parents=True)
+    (proj / "scripts").mkdir()
+    (proj / "dbt_project.yml").write_text("name: scriptsel")
+    (proj / "models" / "a.sql").write_text("SELECT 1 AS x")
+    (proj / "models" / "b.sql").write_text("SELECT x + 1 AS y FROM {{ ref('a') }}")
+    (proj / "models" / "schema.yml").write_text(
+        textwrap.dedent(
+            """
+            version: 2
+            models:
+              - name: a
+                meta:
+                  fal:
+                    scripts:
+                      before: [scripts/before.py]
+                      after: [scripts/after.py]
+            """
+        )
+    )
+    for name in ("before", "after"):
+        (proj / "scripts" / f"{name}.py").write_text(
+            "open(__file__ + '.ran', 'a').write(context.current_model.name + '\\n')\n"
+        )
+    spark.sql("DROP DATABASE IF EXISTS scriptsel CASCADE")
+    fal = FalSpark(proj, spark=spark)
+    assert fal.run(select="scripts/after.py") == {"model.scriptsel.a": "success"}
+    assert fal.ref("a").collect()[0]["x"] == 1
+    for name in ("before", "after"):
+        assert (proj / "scripts" / f"{name}.py.ran").read_text() == "a\n"
+    ran = fal.run_scripts(select="scripts/after.py", use_last_run=False)
+    assert ran == ["script.a.BEFORE.scripts/before.py", "script.a.AFTER.scripts/after.py"]
+    for name in ("before", "after"):
+        assert (proj / "scripts" / f"{name}.py.ran").read_text() == "a\na\n"
+    spark.sql("DROP DATABASE IF EXISTS scriptsel CASCADE")
+
+
+def test_fal_model_body_gets_the_script_globals(spark, tmp_path):
+    """A fal-style model body runs with the globals a model-bound after
+    script gets: ``context.current_model.tests`` lists the model's tests
+    and ``list_models()`` is callable."""
+    import textwrap
+
+    proj = tmp_path / "bodyglobals"
+    (proj / "models").mkdir(parents=True)
+    (proj / "dbt_project.yml").write_text("name: bodyglobals")
+    (proj / "models" / "base.sql").write_text("SELECT 1 AS x")
+    (proj / "models" / "fm.py").write_text(
+        "import json\n"
+        "seen = {'tests': sorted(t.name for t in context.current_model.tests),\n"
+        "        'models': sorted(m.name for m in list_models())}\n"
+        "open(__file__ + '.json', 'w').write(json.dumps(seen))\n"
+        "write_to_model(ref('base'))\n"
+    )
+    (proj / "models" / "schema.yml").write_text(
+        textwrap.dedent(
+            """
+            version: 2
+            models:
+              - name: fm
+                columns:
+                  - name: x
+                    tests: [not_null]
+            """
+        )
+    )
+    spark.sql("DROP DATABASE IF EXISTS bodyglobals CASCADE")
+    fal = FalSpark(proj, spark=spark)
+    statuses = fal.run()
+    assert all(s == "success" for s in statuses.values()), statuses
+    seen = json.loads((proj / "models" / "fm.py.json").read_text())
+    assert seen == {"tests": ["not_null_fm_x"], "models": ["base", "fm"]}
+    assert fal.ref("fm").count() == 1
+    spark.sql("DROP DATABASE IF EXISTS bodyglobals CASCADE")

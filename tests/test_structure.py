@@ -4,6 +4,8 @@
   ``materialize.write_table`` and imports no private materialize name.
 - Only ``readers.at_scale()`` reads the scale/latency profile; operators
   never key on the AQE flag.
+- Scripts, hooks and Python model bodies share one execution path in
+  ``api.py``; scripts are not DAG nodes.
 """
 
 from __future__ import annotations
@@ -70,3 +72,37 @@ def test_operators_do_not_read_the_aqe_flag():
         if "spark.sql.adaptive.enabled" in p.read_text()
     ]
     assert not offenders, f"operators read spark.sql.adaptive.enabled: {offenders}"
+
+
+def test_api_has_one_exec_environment_lookup_and_adapter_response():
+    """One in-process ``exec`` for scripts, hooks and Python models, one
+    environment lookup for everything isolated, and one place that
+    records a model's adapter response."""
+    tree = _tree(API)
+    calls = [n.func.id for n in ast.walk(tree) if isinstance(n, ast.Call) and isinstance(n.func, ast.Name)]
+    assert calls.count("exec") == 1
+    assert calls.count("CurrentAdapterResponse") == 1
+    env_lookups = [
+        n.lineno
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Subscript)
+        and isinstance(n.value, ast.Attribute)
+        and n.value.attr == "environments"
+    ]
+    assert len(env_lookups) == 1, env_lookups
+
+
+def test_every_graph_node_is_a_manifest_model():
+    """Before/after scripts run as their model group's pre/post tasks, so
+    the DAG holds exactly the manifest's models."""
+    from dbt_fal_spark.plans.node_graph import NodeGraph
+    from dbt_fal_spark.project.loader import load_project
+
+    manifest = load_project(Path(__file__).parent / "fixtures" / "jaffle_spark")
+    assert any(
+        m.get_scripts(before=True) or m.get_scripts(before=False)
+        for m in manifest.models.values()
+    ), "fixture declares no scripts"
+    graph = NodeGraph.from_manifest(manifest).graph
+    assert set(graph.nodes) == set(manifest.models)
+    assert all(graph.nodes[n]["model"] is manifest.models[n] for n in graph.nodes)
